@@ -1,7 +1,8 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental near-duplicate filtering — the production shape of corpus
@@ -17,15 +18,16 @@ import org.apache.spark.sql.functions._
   * with the admission-threshold ppm — in a fused `_meta_b<n>_t<ppm>`
   * creation record; legacy r18 `_buckets_`/`_threshold_` marker pairs
   * fold into it on first touch): docs bucket on doc_id, bands on
-  * the band key. Every store-side read a batch performs — the
-  * redelivery skip, the band-index probe, the matched-docs fetch for
-  * the rescore — statically prunes to the buckets the BATCH's keys
-  * hash to, so per-batch I/O is |batch's buckets| x (|corpus| /
-  * buckets), never a corpus scan; at 10B docs a deployment inits with
-  * O(1000) buckets and a batch touches a sliver. A legacy FLAT store
-  * (no marker) backfills into the bucketed layout on first touch —
-  * one columnar scan per tree, committed by an atomic directory
-  * rename, re-runnable after a crash.
+  * the band key. Every store-side read an admission batch performs —
+  * the redelivery skip, the band-index probe, the matched-docs fetch
+  * for the rescore — statically prunes to the buckets the BATCH's keys
+  * hash to (the read-only probe's docs fetch prunes dynamically off
+  * its candidate join instead), so per-batch I/O is |batch's buckets|
+  * x (|corpus| / buckets), never a corpus scan; at 10B docs a
+  * deployment inits with O(1000) buckets and a batch touches a sliver.
+  * A legacy FLAT store (no marker) backfills into the bucketed layout
+  * on first touch — one columnar scan per tree, committed by an atomic
+  * directory rename, re-runnable after a crash.
   *
   * Per batch, candidate generation touches only band-key matches (an
   * equi-join of the batch's band keys against the PRUNED index — at
@@ -54,7 +56,9 @@ object IncrementalDedup {
     * rows — small enough that running the EXACT same round algorithm
     * locally beats 4-6 Spark actions per round. Above the bound the
     * distributed rounds run unchanged (driver state stays bounded by
-    * this constant: edges, never docs). */
+    * this constant: edges, never docs). Sizing: the bound plus one
+    * collected edge rows, their tuples and the endpoint sets come to
+    * about 30 MB of driver heap, under 2% of a 2 GiB driver. */
   val LocalGreedyMaxEdges = 100000L
 
   /** Test seam: specs force the distributed rounds by lowering the
@@ -67,7 +71,10 @@ object IncrementalDedup {
 
   /** Batch-size bound under which store appends coalesce to one task
     * (one file per bucket dir, no shuffle stage) — the
-    * IncrementalAnnIndex CoalescedAppendRows discipline. */
+    * IncrementalAnnIndex CoalescedAppendRows discipline. Sizing: that
+    * task sorts the append by bucket — 100k docs at ~1 KB of text is
+    * ~100 MB, inside one task's share of executor memory (about 300 MB
+    * of a 2 GiB heap at 4 cores); past it the sort spills. */
   val CoalescedAppendRows = 100000L
 
   private def docsPath(store: String) = s"$store/docs"
@@ -110,25 +117,21 @@ object IncrementalDedup {
   /** The docs tree holds ANY rows (live or tombstoned, bucketed or
     * legacy flat) — the store is ESTABLISHED: creation-race
     * arbitration must never apply to it (see [[metaOf]]). */
-  private def storeHasContent(spark: SparkSession, store: String): Boolean = {
-    val (fs, _) = fsOf(spark, store)
-    val dp = new Path(docsPath(store))
-    fs.exists(dp) && fs.listStatus(dp).exists(f =>
-      !f.getPath.getName.startsWith("_"))
+  private def storeHasContent(spark: SparkSession, store: String): Boolean =
+    hasRows(spark, docsPath(store))
+
+  /** Names of the marker files directly under the store root. */
+  private def markerNames(spark: SparkSession, store: String): Seq[String] = {
+    val (fs, hp) = fsOf(spark, store)
+    if (!fs.exists(hp)) Nil
+    else fs.listStatus(hp).toSeq.filter(_.isFile).map(_.getPath.getName)
   }
 
   /** All fused creation-record markers, as (ppm, buckets) sorted. */
   private def metaMarkers(spark: SparkSession,
-      store: String): Seq[(Long, Int)] = {
-    val (fs, hp) = fsOf(spark, store)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq.flatMap { f =>
-      f.getPath.getName match {
-        case MetaRe(b, t) if f.isFile => Some((t.toLong, b.toInt))
-        case _                        => None
-      }
-    }.sorted
-  }
+      store: String): Seq[(Long, Int)] =
+    markerNames(spark, store)
+      .collect { case MetaRe(b, t) => (t.toLong, b.toInt) }.sorted
 
   /** The store's CREATION RECORD — one fused `_meta_b<n>_t<ppm>`
     * marker holding bucket count and admission-threshold ppm, written
@@ -177,28 +180,13 @@ object IncrementalDedup {
 
   /** Legacy (r18 two-marker) forms, read for migration only. */
   private def legacyBucketsOf(spark: SparkSession,
-      store: String): Option[Int] = {
-    val (fs, hp) = fsOf(spark, store)
-    if (!fs.exists(hp)) None
-    else fs.listStatus(hp).toSeq.flatMap { f =>
-      f.getPath.getName match {
-        case BucketsRe(n) if f.isFile => Some(n.toInt)
-        case _                        => None
-      }
-    }.headOption
-  }
+      store: String): Option[Int] =
+    markerNames(spark, store).collectFirst { case BucketsRe(n) => n.toInt }
 
   private def legacyThresholdsOf(spark: SparkSession,
-      store: String): Seq[Long] = {
-    val (fs, hp) = fsOf(spark, store)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq.flatMap { f =>
-      f.getPath.getName match {
-        case ThresholdRe(n) if f.isFile => Some(n.toLong)
-        case _                          => None
-      }
-    }.sorted
-  }
+      store: String): Seq[Long] =
+    markerNames(spark, store).collect { case ThresholdRe(n) => n.toLong }
+      .sorted
 
   private def deleteLegacyMarkers(spark: SparkSession,
       store: String): Unit = {
@@ -297,8 +285,15 @@ object IncrementalDedup {
   }
 
   private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
+    val (fs, hp) = fsOf(spark, p)
+    fs.exists(hp)
+  }
+
+  /** `p` holds any entry that is not a `_` marker. */
+  private def hasRows(spark: SparkSession, p: String): Boolean = {
+    val (fs, hp) = fsOf(spark, p)
+    fs.exists(hp) && fs.listStatus(hp).exists(f =>
+      !f.getPath.getName.startsWith("_"))
   }
 
   /** The band index holds any rows. Two shapes make docs-without-bands
@@ -306,14 +301,9 @@ object IncrementalDedup {
     * invariant: a [[rebuildStoreThreshold]] destination starts as
     * tombstones only (docs rows, no bands), and a [[removeDocs]] that
     * empties EVERY band bucket leaves a file-less bands directory
-    * (the explicit partition drop). Reading either would fail schema
-    * inference; both simply mean "empty index". */
-  private def hasBandRows(spark: SparkSession, store: String): Boolean = {
-    val bp = new Path(bandsPath(store))
-    val fs = bp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(bp) && fs.listStatus(bp).exists(f =>
-      !f.getPath.getName.startsWith("_"))
-  }
+    * (the explicit partition drop). Both simply mean "empty index". */
+  private def hasBandRows(spark: SparkSession, store: String): Boolean =
+    hasRows(spark, bandsPath(store))
 
   /** Stable key→bucket map (Murmur3 mod n — engine-internal, never
     * oracle-compared). The key is CANONICALIZED to long before
@@ -324,7 +314,7 @@ object IncrementalDedup {
     * sides must bucket through the same canonical type.
     *
     * API boundary contract: store keys are LONG-CASTABLE ids, enforced
-    * loudly per batch ([[requireCastableKeys]]). A store whose bucket
+    * loudly per batch ([[refuseBadKeys]]). A store whose bucket
     * partitions predate the canonical cast (written from int-typed ids
     * under the old hash(int) scheme) is mis-bucketed under this map;
     * [[rebucketStore]] to the same count rewrites it through the
@@ -332,18 +322,23 @@ object IncrementalDedup {
   private def bucketCol(key: Column, nb: Int): Column =
     pmod(hash(key.cast("long")), lit(nb))
 
+  /** `cols` of the batch with `doc_id` canonicalized to long through
+    * `try_cast`, counting NULL or non-castable ids into `keys` in the
+    * same pass: such a row would become a null key that
+    * `dropDuplicates` silently collapses into one doc, or an ANSI cast
+    * error deep in the first store job. Materialize, then
+    * [[refuseBadKeys]]. */
+  private def keyed(batch: DataFrame, keys: Observation,
+      cols: String*): DataFrame =
+    batch.select(col("doc_id").try_cast("long").as("doc_id") +:
+        cols.map(col): _*)
+      .observe(keys, count(when(col("doc_id").isNull, 1)).as("bad"))
+
   /** Fail loudly — with a message naming the column and the canonical
-    * type — when any `doc_id` is NULL or not castable to long: under
-    * legacy cast semantics every such row becomes a null key and
-    * `dropDuplicates` silently collapses the lot into one doc (a
-    * destroyed batch, not a dedup decision), while ANSI mode would
-    * throw a bare cast error from deep inside the first store job.
-    * `try_cast` probes without tripping ANSI; castable string/int ids
-    * pass. One batch-sized aggregation. */
-  private def requireCastableKeys(batch: DataFrame, op: String): Unit = {
-    val bad = batch.agg(
-      count(when(col("doc_id").try_cast("long").isNull, 1)))
-      .head().getLong(0)
+    * type — when the [[keyed]] pass counted any bad id. Runs before the
+    * call touches the store, so a refused batch leaves no trace. */
+  private def refuseBadKeys(keys: Observation, op: String): Unit = {
+    val bad = keys.get("bad").asInstanceOf[Long]
     require(bad == 0,
       s"$op: $bad doc_id value(s) are NULL or not castable to long " +
         "(the store's canonical key type) — non-integral ids would " +
@@ -357,11 +352,30 @@ object IncrementalDedup {
     df.select(bucketCol(key, nb).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq
 
+  /** The same set observed in a pass that already runs. */
+  private def bucketsObserved(key: Column, nb: Int): Column =
+    collect_set(bucketCol(key, nb)).as("bs")
+
+  private def bucketsOf(o: Observation): Seq[Int] =
+    o.get("bs").asInstanceOf[Seq[Int]]
+
+  private def countOf(o: Observation): Long = o.get("n").asInstanceOf[Long]
+
+  /** Declared schemas of the two store trees: a read needs no
+    * footer-reading inference job, and files written from int-typed
+    * ids widen to the canonical BIGINT key file by file. */
+  private val TreeSchemas = Map(
+    "docs" -> "doc_id BIGINT, text STRING, b INT",
+    "bands" -> "doc_id BIGINT, bk BIGINT, b INT")
+
+  private def readTree(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(TreeSchemas(new Path(path).getName)).parquet(path)
+
   /** A store tree pruned to `buckets` (package-visible so the spec can
     * assert the static pruning on the physical plan). */
   private[graft] def treeFor(spark: SparkSession, path: String,
       buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(path).filter(col("b").isin(buckets: _*))
+    readTree(spark, path).filter(col("b").isin(buckets: _*))
 
   /** Bucket count from the creation record (fused marker first,
     * legacy `_buckets_` fallback), if the store is bucketed. */
@@ -372,8 +386,7 @@ object IncrementalDedup {
   /** Tree holds FLAT legacy data: parquet files directly under the
     * root instead of `b=` partitions. */
   private def hasFlatData(spark: SparkSession, p: String): Boolean = {
-    val hp = new Path(p)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, hp) = fsOf(spark, p)
     fs.exists(hp) && fs.listStatus(hp).exists(f =>
       f.isFile && !f.getPath.getName.startsWith("_"))
   }
@@ -397,17 +410,9 @@ object IncrementalDedup {
     * intent in one pass, so the losers can never re-trigger a second
     * O(store) rewrite on a later touch. */
   private def pendingRebucket(
-      spark: SparkSession, store: String): Option[Int] = {
-    val hp = new Path(store)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp)) None
-    else fs.listStatus(hp).toSeq.flatMap { f =>
-      f.getPath.getName match {
-        case RebucketRe(n) if f.isFile => Some(n.toInt)
-        case _                         => None
-      }
-    }.maxOption
-  }
+      spark: SparkSession, store: String): Option[Int] =
+    markerNames(spark, store)
+      .collect { case RebucketRe(n) => n.toInt }.maxOption
 
   /** Re-bucket a live store to `buckets` — the operator the bucket
     * count's creation-time immutability otherwise forbids: a corpus
@@ -439,8 +444,7 @@ object IncrementalDedup {
         s"$storeDir is not a bucketed store (no _buckets_ marker) — " +
           "the first processBatch creates one"))
     if (cur == buckets) return
-    val hp = new Path(storeDir)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, hp) = fsOf(spark, storeDir)
     try fs.create(new Path(hp, s"_rebucket_$buckets"), false).close()
     catch { case _: java.io.IOException => () } // concurrent stamp
     doRebucket(spark, storeDir, buckets)
@@ -455,8 +459,7 @@ object IncrementalDedup {
     * resolves the intent before trusting a marker. */
   private def doRebucket(spark: SparkSession, store: String,
       nb: Int): Unit = {
-    val hp = new Path(store)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, hp) = fsOf(spark, store)
     def rewrite(path: String, key: String): Unit =
       if (exists(spark, path))
         swapTree(spark, path) { tmp =>
@@ -520,8 +523,7 @@ object IncrementalDedup {
     * forward completion is always safe). */
   private def swapTree(spark: SparkSession, path: String)(
       stage: String => Unit): Unit = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, hp) = fsOf(spark, path)
     val tmp = new Path(path + ".bktmp")
     val retired = new Path(path + ".flat")
     fs.delete(tmp, true)
@@ -573,8 +575,7 @@ object IncrementalDedup {
     * incomplete — the operation re-runs); leftover staging beside a
     * live tree is discarded. */
   private def recoverBackfill(spark: SparkSession, store: String): Unit = {
-    val hp = new Path(store)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, hp) = fsOf(spark, store)
     Seq(docsPath(store), bandsPath(store)).foreach { path =>
       val live = new Path(path)
       val tmp = new Path(path + ".bktmp")
@@ -604,26 +605,16 @@ object IncrementalDedup {
     Dedup.minhashBandKeys(Dedup.minhashSignaturesFromSets(
       Dedup.docShingleSets(docs, "doc_id", "text")))
 
-  /** Exact-Jaccard rescore of candidate (da, db) pairs given a combined
-    * (doc_id, ss) shingle-set relation covering both sides — the caller
-    * passes SETS, not texts, so a side whose sets are already pinned
-    * (processBatch's per-batch checkpoint) is never re-shingled. */
-  private def rescore(cand: DataFrame, shingleSets: DataFrame,
-      threshold: Double): DataFrame = {
-    val sets = shingleSets
-      .select(col("doc_id"), col("ss"), size(col("ss")).cast("long").as("n"))
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("ss").as("ssa"),
-        col("n").as("na")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("ss").as("ssb"),
-        col("n").as("nb")), "db")
-      .withColumn("i",
-        size(array_intersect(col("ssa"), col("ssb"))).cast("long"))
-      // round(4) BEFORE thresholding, exactly like minhashLshPairs — the
-      // two Jaccard paths must classify boundary docs identically
-      .filter(round(col("i").cast("double")
-        / (col("na") + col("nb") - col("i")), 4) >= threshold)
-      .select(cand.columns.map(col): _*) // pass through tag columns
+  /** (da, db, jaccard) of pairs carrying both sides' shingle sets
+    * (`ssa`, `ssb`), kept at or above `threshold`. round(4) BEFORE
+    * thresholding, exactly like minhashLshPairs — the two Jaccard paths
+    * must classify boundary docs identically. */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame = {
+    val i = size(array_intersect(col("ssa"), col("ssb"))).cast("long")
+    pairs.select(col("da"), col("db"), round(i.cast("double") /
+        (size(col("ssa")).cast("long") + size(col("ssb")).cast("long") - i),
+        4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** The accepted corpus as (doc_id, text) — the store's read API
@@ -670,11 +661,11 @@ object IncrementalDedup {
     * removed). */
   def removeDocs(spark: SparkSession, storeDir: String,
       doomed: DataFrame): RemoveResult = {
-    requireCastableKeys(doomed, "removeDocs")
+    val keys = Observation()
+    val ids = keyed(doomed, keys).distinct().localCheckpoint()
+    refuseBadKeys(keys, "removeDocs")
     if (!exists(spark, docsPath(storeDir))) return RemoveResult(0L, 0L)
     val nb = ensureBuckets(spark, storeDir)
-    val ids = doomed.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
     val docBuckets = bucketSet(ids, col("doc_id"), nb)
     // the doomed docs' LIVE texts (bucket-pruned; tombstones and
     // never-admitted ids contribute nothing)
@@ -818,63 +809,70 @@ object IncrementalDedup {
     * never admitted, so a clone farm cannot pile into one bucket the
     * way it can in the one-shot generator — which is why the one-shot
     * [[Dedup.minhashLshPairsBetween]] carries a maxBucket cap and this
-    * probe does not need one). */
+    * probe does not need one).
+    *
+    * Action budget: two batch-sized checkpoints — the batch's shingle
+    * sets (counting bad keys) and its band keys (observing their bucket
+    * set) — and the caller's one action on the returned relation. No
+    * bucket-set or schema-inference job runs. */
   def probeStorePairs(
       batch: DataFrame,
       storeDir: String,
       threshold: Double = Dedup.JaccardThreshold,
       storeBuckets: Int = DefaultStoreBuckets): DataFrame = {
     val spark = batch.sparkSession
-    requireCastableKeys(batch, "probeStorePairs")
-    val incoming = batch
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
+    // batch-sized; feeds band keys AND the rescore — pin it so the
+    // incoming docs shingle once
+    val keys = Observation()
+    val incSets = keyed(batch, keys, "text").dropDuplicates("doc_id")
+      .select(col("doc_id"),
+        array_distinct(Dedup.shingles(col("text"))).as("ss"))
+      .filter(size(col("ss")) > 0)
+      .localCheckpoint()
+    refuseBadKeys(keys, "probeStorePairs")
     if (!hasBandRows(spark, storeDir))
-      return incoming.select(col("doc_id").as("pub_id"),
-        col("doc_id").as("new_id"),
-        lit(0.0).as("jaccard")).limit(0)
+      return incSets.select(col("doc_id").as("pub_id"),
+        col("doc_id").as("new_id"), lit(0.0).as("jaccard")).limit(0)
     // first touch of a legacy flat store migrates it (marker-gated,
     // crash-safe) — every read below then prunes on the bucket column
     val nb = ensureBuckets(spark, storeDir, storeBuckets)
-    // batch-sized; feeds band keys AND the rescore — pin it so the
-    // incoming docs shingle once
-    val incSets = Dedup.docShingleSets(incoming, "doc_id", "text")
-      .localCheckpoint()
+    val bandBuckets = Observation()
     val newBands = Dedup.minhashBandKeys(
-      Dedup.minhashSignaturesFromSets(incSets)).localCheckpoint()
-    // the index probe reads ONLY the buckets the batch's band keys
-    // hash to — |batch's buckets| / nb of the index, never all of it
-    val index = treeFor(spark, bandsPath(storeDir),
-      bucketSet(newBands, col("bk"), nb))
-    val cand = newBands
-      .join(index.withColumnRenamed("doc_id", "pub_id"), "bk")
-      .select(col("pub_id"), col("doc_id").as("new_id"))
-      .distinct()
-    // only MATCHED accepted docs fetch through the candidate join and
-    // re-shingle (row-local, candidate-bounded) — the corpus itself is
-    // never re-banded and never free-scanned. The join carries the
-    // BUCKET key alongside the id (b is a pure function of pub_id), so
-    // the docs scan's partitions prune dynamically off the candidate
-    // side (DPP) while the probe stays one lazy plan.
-    val pubDocs = spark.read.parquet(docsPath(storeDir))
-      .filter(col("text").isNotNull) // tombstones are not corpus
-      .select(col("doc_id").as("pub_id"), col("text"), col("b"))
-    cand
-      .withColumn("b", bucketCol(col("pub_id"), nb))
-      .join(pubDocs, Seq("pub_id", "b"))
-      .withColumn("ssa", array_distinct(Dedup.shingles(col("text"))))
-      .drop("text")
-      .withColumn("na", size(col("ssa")).cast("long"))
-      .join(incSets.select(col("doc_id").as("new_id"),
-        col("ss").as("ssb"), size(col("ss")).cast("long").as("nb")),
-        "new_id")
-      .withColumn("i",
-        size(array_intersect(col("ssa"), col("ssb"))).cast("long"))
-      .withColumn("jaccard", round(col("i").cast("double")
-        / (col("na") + col("nb") - col("i")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("pub_id"), col("new_id"), col("jaccard"))
+        Dedup.minhashSignaturesFromSets(incSets))
+      .observe(bandBuckets, bucketsObserved(col("bk"), nb))
+      .localCheckpoint()
+    storePairs(storeCandidates(spark, storeDir, newBands,
+        bucketsOf(bandBuckets)), readTree(spark, docsPath(storeDir)), nb,
+        incSets, threshold)
+      .select(col("da").as("pub_id"), col("db").as("new_id"), col("jaccard"))
   }
+
+  /** (da = stored doc, db = batch doc) band-key matches: the index
+    * probe reads ONLY `bandBuckets`, the buckets the batch's band keys
+    * hash to — |batch's buckets| / nb of the index, never all of it. */
+  private def storeCandidates(spark: SparkSession, storeDir: String,
+      newBands: DataFrame, bandBuckets: Seq[Int]): DataFrame =
+    newBands
+      .join(treeFor(spark, bandsPath(storeDir), bandBuckets)
+        .withColumnRenamed("doc_id", "da"), "bk")
+      .select(col("da"), col("doc_id").as("db"))
+      .distinct()
+
+  /** (da, db, jaccard) of candidate (da = stored doc, db = batch doc)
+    * pairs at or above `threshold`, against the batch's pinned shingle
+    * `sets`: only the MATCHED stored docs are fetched from the `docs`
+    * tree and re-shingled, never the corpus. The fetch joins on (id,
+    * bucket) — b is a pure function of the id — so a `docs` tree the
+    * caller did not prune statically still prunes dynamically off the
+    * candidate side (DPP) while the plan stays one lazy relation. */
+  private def storePairs(cand: DataFrame, docs: DataFrame, nb: Int,
+      sets: DataFrame, threshold: Double): DataFrame =
+    jaccardAtLeast(cand.withColumn("b", bucketCol(col("da"), nb))
+      .join(docs.filter(col("text").isNotNull) // tombstones are not corpus
+        .select(col("doc_id").as("da"), col("text"), col("b")), Seq("da", "b"))
+      .withColumn("ssa", array_distinct(Dedup.shingles(col("text"))))
+      .join(sets.select(col("doc_id").as("db"), col("ss").as("ssb")), "db"),
+      threshold)
 
   /** Process one batch of (doc_id, text): rejects near-dups of accepted
     * docs and in-batch near-dups (lower id wins), appends survivors to
@@ -890,23 +888,41 @@ object IncrementalDedup {
     * call and follows the record rather than refusing — callers that
     * need their exact value enforced against an unknown store should
     * compare the refusal contract first. Threshold identity is
-    * recorded at ppm (1e-6) resolution; finer digits round. */
+    * recorded at ppm (1e-6) resolution; finer digits round.
+    *
+    * Action budget on an established store: four checkpoints, whose
+    * passes also count and observe bucket sets — the deduplicated batch,
+    * the fresh docs with their shingle sets, their band keys, the store
+    * candidates — then ONE collect of the rescored edges and the two
+    * appends. No count, bucket-set or schema-inference job runs: under
+    * [[LocalGreedyMaxEdges]] the accepted count is driver arithmetic
+    * and the rejected ids filter both appends; over it the distributed
+    * rounds add their per-round actions. */
   def processBatch(
       batch: DataFrame,
       storeDir: String,
       threshold: Double = Dedup.JaccardThreshold,
       storeBuckets: Int = DefaultStoreBuckets): BatchResult = {
     val spark = batch.sparkSession
-    requireCastableKeys(batch, "processBatch")
+    // the key check rides the incoming pass, so it runs before ensureMeta
+    // may touch the store; the pass observes the id buckets under the
+    // count listed now (a call that moves the count recomputes them)
+    val nbListed = metaMarkers(spark, storeDir).headOption
+      .fold(storeBuckets)(_._2)
+    val keys = Observation()
+    val inc = Observation()
+    val incoming = timed("incoming ckpt")(keyed(batch, keys, "text")
+      .dropDuplicates("doc_id")
+      .observe(inc, count(lit(1)).as("n"),
+        bucketsObserved(col("doc_id"), nbListed))
+      .localCheckpoint())
+    refuseBadKeys(keys, "processBatch")
     // one store = one admission regime: the creation record wins for
     // default calls, a disagreeing explicit threshold refuses loudly
     val (nb, admPpm) = timed("ensureMeta")(
       ensureMeta(spark, storeDir, storeBuckets,
         Some(thresholdPpm(threshold))))
     val adm = admPpm / 1e6
-    val incoming = timed("incoming ckpt")(batch
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .dropDuplicates("doc_id").localCheckpoint())
     // one existence probe per batch (each is a FileSystem RPC); the
     // bands store may lag docs by half a crashed batch, but writes go
     // bands-first so that lag direction never loses index entries.
@@ -916,77 +932,61 @@ object IncrementalDedup {
     val storeExists = exists(spark, docsPath(storeDir))
     val bandsLive = storeExists && hasBandRows(spark, storeDir)
 
-    val (fresh, nFresh, nRedelivered) = timed("redelivery skip")(
-      if (!storeExists) (incoming, incoming.count(), 0L)
-      else {
-        // ONE driver-sized aggregation serves the probe's bucket set
-        // AND the incoming count (previously two jobs over the same
-        // checkpoint); the redelivery skip probes only those buckets
-        val s = incoming.agg(count(lit(1)).as("n"),
-          collect_set(bucketCol(col("doc_id"), nb)).as("bs")).head()
-        val known = treeFor(spark, docsPath(storeDir),
-          s.getSeq[Int](1)).select("doc_id")
-        val f = incoming.join(known, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        val nf = f.count()
-        (f, nf, s.getLong(0) - nf)
-      })
-
-    // fresh shingles ONCE per batch: the sets checkpoint feeds BOTH
-    // the band keys and the exact rescore (probeStorePairs' shape —
-    // the pre-r19opt form shingled the batch a second time inside the
-    // rescore's combined-texts pass)
-    val freshSets = timed("shingle ckpt")(
-      Dedup.docShingleSets(fresh, "doc_id", "text").localCheckpoint())
+    // the redelivery skip and the shingling share ONE checkpoint; the
+    // sets feed BOTH the band keys and the rescore
+    val fr = Observation()
+    val fresh = timed("fresh ckpt")((
+      if (!storeExists) incoming
+      else incoming.join(
+        treeFor(spark, docsPath(storeDir),
+          if (nb == nbListed) bucketsOf(inc)
+          else bucketSet(incoming, col("doc_id"), nb)).select("doc_id"),
+        Seq("doc_id"), "left_anti"))
+      .withColumn("ss", array_distinct(Dedup.shingles(col("text"))))
+      .observe(fr, count(lit(1)).as("n"))
+      .localCheckpoint())
+    val nRedelivered = countOf(inc) - countOf(fr)
+    val nFresh = countOf(fr)
+    // a doc under ShingleSize words has no set, no bands, no edge: kept
+    val freshSets = fresh.filter(size(col("ss")) > 0).select("doc_id", "ss")
+    val bandBuckets = Observation()
     val newBands = timed("bands ckpt")(Dedup.minhashBandKeys(
-      Dedup.minhashSignaturesFromSets(freshSets)).localCheckpoint())
+        Dedup.minhashSignaturesFromSets(freshSets))
+      .observe(bandBuckets, bucketsObserved(col("bk"), nb))
+      .localCheckpoint())
 
-    // candidates vs the ACCEPTED corpus: equi-join on the band index
-    val vsStore = timed("store candidates")(
-      (if (!bandsLive)
+    // rescored near-dup edges (da, db): a store match always rejects
+    // `db`; an in-batch match only if `da` is itself accepted
+    val storeEdges =
+      if (!bandsLive)
         fresh.select(col("doc_id").as("da"), col("doc_id").as("db")).limit(0)
       else {
-        // the index probe reads only the batch's band-key buckets
-        val index = treeFor(spark, bandsPath(storeDir),
-          bucketSet(newBands, col("bk"), nb))
-        newBands.join(index.withColumnRenamed("doc_id", "da"), "bk")
-          .select(col("da"), col("doc_id").as("db"))
-          .distinct()
-      }).localCheckpoint()) // candidate-sized; feeds the rescore AND
-                            // the matched-docs bucket set
-
-    // in-batch candidates: band self-join, lower id survives
-    val inBatch = newBands.as("a")
+        // its pass observes the matched docs' buckets: a static prune
+        val matched = Observation()
+        val cand = timed("candidates ckpt")(storeCandidates(spark,
+            storeDir, newBands, bucketsOf(bandBuckets))
+          .observe(matched, bucketsObserved(col("da"), nb))
+          .localCheckpoint())
+        storePairs(cand, treeFor(spark, docsPath(storeDir),
+          bucketsOf(matched)), nb, freshSets, adm)
+      }
+    val inEdges = jaccardAtLeast(newBands.as("a")
       .join(newBands.as("b"),
         col("a.bk") === col("b.bk") && col("a.doc_id") > col("b.doc_id"))
       .select(col("b.doc_id").as("da"), col("a.doc_id").as("db"))
       .distinct()
+      .join(freshSets.select(col("doc_id").as("da"), col("ss").as("ssa")), "da")
+      .join(freshSets.select(col("doc_id").as("db"), col("ss").as("ssb")), "db"),
+      adm)
 
-    // only the MATCHED accepted docs get re-shingled for the rescore —
-    // never the whole corpus
-    val storeTexts =
-      if (!storeExists)
-        fresh.limit(0)
-      else treeFor(spark, docsPath(storeDir),
-          bucketSet(vsStore, col("da"), nb)) // matched buckets only
-        .filter(col("text").isNotNull) // tombstones cannot match
-        .select("doc_id", "text")
-        .join(vsStore.select(col("da").as("doc_id")).distinct(), "doc_id")
-
-    // One rescore over both candidate sets, tagged by provenance: a
-    // store match always rejects the incoming doc (`db`), but an
-    // in-batch match only rejects `db` if `da` is itself ACCEPTED.
-    // The sets side = the batch's pinned sets ∪ the matched store
-    // docs' sets (only those re-shingle — never the corpus, and never
-    // the batch a second time).
-    val scored = timed("rescore ckpt")(rescore(
-      vsStore.withColumn("src", lit("s"))
-        .unionByName(inBatch.withColumn("src", lit("b"))),
-      freshSets.unionByName(
-        Dedup.docShingleSets(storeTexts, "doc_id", "text")),
-      adm).localCheckpoint())
-    val storeRejected = scored.filter(col("src") === "s")
-      .select(col("db").as("doc_id")).distinct()
+    // ONE collect of both kinds: store edges (a few per fresh doc at
+    // most) and in-batch edges capped one past the local bound
+    val bound = localGreedyMaxEdges
+    val (storeHits, batchHits) = timed("edges collect")(
+      storeEdges.select(lit(true).as("s"), col("da"), col("db"))
+        .unionByName(inEdges.limit(math.min(bound + 1, Int.MaxValue).toInt)
+          .select(lit(false).as("s"), col("da"), col("db")))
+        .collect().partition(_.getBoolean(0)))
 
     // In-batch resolution must match processing the batch's docs ONE AT
     // A TIME in id order (so acceptance does not depend on how a corpus
@@ -997,25 +997,21 @@ object IncrementalDedup {
     // parallel rounds: each round accepts all docs with no smaller-id
     // UNDECIDED neighbor, rejects their neighbors, and drops both from
     // the graph — exactly the sequential result, in O(longest dependency
-    // chain) rounds, with no driver-side edge materialization.
-    val batchAccepted = timed("greedy MIS") {
-      val inEdges = scored.filter(col("src") === "b").select("da", "db")
+    // chain) rounds. Returns the accepted count and the filter that
+    // keeps the accepted rows of a doc_id-keyed relation.
+    val (nAccepted, keep) = timed("greedy MIS") {
       // regime split (r19): the similarity-edge relation is
       // candidate-bounded and usually tiny (admission keeps the store
       // dup-free, so in-batch near-dup edges are the exception) — under
       // [[LocalGreedyMaxEdges]] the SAME round algorithm runs on the
       // driver (same minima rule, same round cap, same
       // undecided-after-cap rejection — IncrementalDedupSpec pins the
-      // regimes equal), replacing 4-6 Spark actions per round with one
-      // collect. Driver state is edges only, never docs; over the
-      // bound the distributed rounds below run unchanged.
-      val nEdges = inEdges.count() // scored is checkpointed: cheap
-      if (nEdges <= localGreedyMaxEdges) {
-        val storeRej = scored.filter(col("src") === "s")
-          .select(col("db")).distinct().collect()
-          .map(_.getLong(0)).toSet
-        val rawEdges = inEdges.collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
+      // regimes equal), replacing 4-6 Spark actions per round. Driver
+      // state is edges only, never docs; over the bound the distributed
+      // rounds below run unchanged.
+      if (batchHits.length <= bound) {
+        val storeRej = storeHits.iterator.map(_.getLong(2)).toSet
+        val rawEdges = batchHits.map(r => (r.getLong(1), r.getLong(2)))
         var rem = scala.collection.immutable.SortedSet.empty[Long] ++
           rawEdges.iterator.flatMap(e => Iterator(e._1, e._2))
             .filterNot(storeRej)
@@ -1037,21 +1033,19 @@ object IncrementalDedup {
         }
         // endpoints neither store-rejected nor accepted — including
         // any still undecided at the cap — are the greedy rejects;
-        // every non-endpoint fresh doc is accepted by construction
-        // (round 1 minima), so only this small set needs to ride back
-        val rejected = rawEdges.iterator
-          .flatMap(e => Iterator(e._1, e._2))
-          .filterNot(storeRej).filterNot(acceptedIds).toSeq
-          .distinct.sorted
-        import spark.implicits._
-        fresh.select("doc_id")
-          .join(storeRejected, Seq("doc_id"), "left_anti")
-          .join(broadcast(rejected.toDF("doc_id")),
-            Seq("doc_id"), "left_anti")
+        // every other fresh doc is accepted by construction, so the
+        // count is arithmetic and only the rejected ids ride back
+        val rejected = storeRej ++ rawEdges.iterator
+          .flatMap(e => Iterator(e._1, e._2)).filterNot(acceptedIds)
+        val rejectedIds = spark.sparkContext.broadcast(rejected)
+        val isRejected = udf((id: Long) => rejectedIds.value.contains(id))
+        (nFresh - rejected.size, (df: DataFrame) =>
+          if (rejected.isEmpty) df else df.filter(!isRejected(col("doc_id"))))
       } else {
+        val storeRejected = storeEdges.select(col("db").as("doc_id")).distinct()
         var remaining = fresh.select("doc_id")
           .join(storeRejected, Seq("doc_id"), "left_anti").localCheckpoint()
-        var edges = inEdges
+        var edges = inEdges.select("da", "db")
           .join(remaining.withColumnRenamed("doc_id", "da"), Seq("da"), "left_semi")
           .join(remaining.withColumnRenamed("doc_id", "db"), Seq("db"), "left_semi")
           .localCheckpoint()
@@ -1084,24 +1078,23 @@ object IncrementalDedup {
         // a >MaxGreedyRounds dependency chain is adversarial; the docs
         // still undecided at the cap are rejected (conservative: never
         // admits a near-dup, may drop a would-be survivor)
-        if (acc.isEmpty) fresh.select("doc_id").limit(0)
-        else acc.reduce(_ unionByName _)
+        val accepted = fresh.select("doc_id")
+          .join(if (acc.isEmpty) fresh.select("doc_id").limit(0)
+            else acc.reduce(_ unionByName _), Seq("doc_id"), "left_semi")
+          .localCheckpoint()
+        (accepted.count(), (df: DataFrame) =>
+          df.join(accepted, Seq("doc_id"), "left_semi"))
       }
     }
 
-    val accepted = timed("accepted ckpt")(
-      fresh.join(batchAccepted, Seq("doc_id"), "left_semi")
-        .localCheckpoint())
-
-    val nAccepted = accepted.count()
     if (nAccepted > 0) timed("store writes") {
       // bands FIRST, docs second: a crash between the writes leaves
       // extra band rows pointing at absent docs (harmless — candidates
       // go through the rescore join against docs/), while the opposite
       // order would leave accepted docs invisible to future dedup and
       // the doc_id redelivery skip would never backfill them.
-      // Band rows come from the checkpointed newBands (a semi-join),
-      // not a second full shingle+MinHash pass over the text.
+      // Band rows come from the checkpointed newBands, not a second
+      // full shingle+MinHash pass over the text.
       // Batch-sized appends (the known nAccepted) write NARROW —
       // coalesce(1): one task, one file per bucket dir, no shuffle
       // stage (IncrementalAnnIndex's CoalescedAppendRows discipline);
@@ -1109,17 +1102,14 @@ object IncrementalDedup {
       def shaped(df: DataFrame): DataFrame =
         if (nAccepted <= CoalescedAppendRows) df.coalesce(1)
         else df.repartition(col("b"))
-      shaped(newBands
-          .join(accepted.select("doc_id"), Seq("doc_id"), "left_semi")
-          .withColumn("b", bucketCol(col("bk"), nb)))
+      shaped(keep(newBands).withColumn("b", bucketCol(col("bk"), nb)))
         .write.partitionBy("b").mode(SaveMode.Append)
         .parquet(bandsPath(storeDir))
-      shaped(accepted.withColumn("b", bucketCol(col("doc_id"), nb)))
+      shaped(keep(fresh.select("doc_id", "text"))
+          .withColumn("b", bucketCol(col("doc_id"), nb)))
         .write.partitionBy("b").mode(SaveMode.Append)
         .parquet(docsPath(storeDir))
     }
-    // nFresh was counted in the redelivery-skip block — never recount
-    // a checkpointed relation for a number already in hand
     BatchResult(nAccepted, nFresh - nAccepted, nRedelivered)
   }
 }

@@ -19,6 +19,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   import spark.implicits._
 
+  /** Job budgets of one call on an established store (see the job
+    * budget test): a re-added count or collect fails loudly. */
+  private val WriteJobBudget = 15
+  private val ReadJobBudget = 8
+
   private val base =
     "the quick brown fox jumps over the lazy dog near the riverbank " +
       "while birds sing in the morning light across the quiet valley"
@@ -106,7 +111,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val a = base
     val b = base.replace("valley", "meadow")
     val c = base.replace("valley", "meadow").replace("quick", "swift")
-    def run(): (IncrementalDedup.BatchResult, Set[Long]) = {
+    def ids(store: String): Set[Long] = spark.read.parquet(s"$store/docs")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    def run(): (IncrementalDedup.BatchResult, Set[Long],
+        IncrementalDedup.BatchResult, Set[Long]) = {
       val store = Files.createTempDirectory("incdedup_mis").toString +
         "/corpus"
       IncrementalDedup.processBatch(
@@ -117,17 +125,34 @@ class IncrementalDedupSpec extends AnyFunSuite {
         Seq((1L, a), (2L, b), (3L, c),
           (4L, other.replace("services", "fabrics")))
           .toDF("doc_id", "text"), store)
-      (r, spark.read.parquet(s"$store/docs")
-        .select("doc_id").collect().map(_.getLong(0)).toSet)
+      // the composite batch on a store holding doc 0: every decision
+      // kind at once — redelivered 0, store reject 4, chain A~B~C, and
+      // doc 5, shorter than ShingleSize (no shingles, no bands, so no
+      // edge can reject it)
+      val store2 = Files.createTempDirectory("incdedup_mis2").toString +
+        "/corpus"
+      IncrementalDedup.processBatch(
+        Seq((0L, other)).toDF("doc_id", "text"), store2)
+      val r2 = IncrementalDedup.processBatch(
+        Seq((0L, other), (1L, a), (2L, b), (3L, c),
+          (4L, other.replace("services", "fabrics")), (5L, "too short"))
+          .toDF("doc_id", "text"), store2)
+      (r, ids(store), r2, ids(store2))
     }
-    val (rLocal, idsLocal) = run()
+    val (rLocal, idsLocal, r2Local, ids2Local) = run()
     System.setProperty("graft.test.localGreedyMaxEdges", "0")
-    val (rDist, idsDist) =
+    val (rDist, idsDist, r2Dist, ids2Dist) =
       try run()
       finally System.clearProperty("graft.test.localGreedyMaxEdges")
     assert(rLocal == rDist, s"$rLocal vs $rDist")
     assert(idsLocal == idsDist, s"$idsLocal vs $idsDist")
     assert(idsLocal == Set(0L, 1L, 3L), s"$idsLocal")
+    // accepted {1, 3, 5}; rejected B (greedy) and 4 (store); 0 skipped
+    val want = IncrementalDedup.BatchResult(3, 2, 1)
+    assert(r2Local == want, s"local regime: $r2Local")
+    assert(r2Dist == want, s"distributed regime: $r2Dist")
+    assert(ids2Local == Set(0L, 1L, 3L, 5L), s"$ids2Local")
+    assert(ids2Dist == ids2Local, s"$ids2Dist vs $ids2Local")
   }
 
   test("in-batch near-dups resolve lower-id-wins") {
@@ -364,6 +389,28 @@ class IncrementalDedupSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       IncrementalDedup.probeStorePairs(nullBatch, store)
     }
+  }
+
+  test("a batch refused for its keys leaves no trace on a new store") {
+    val dir = Files.createTempDirectory("incdedupnt").toString
+    val store = s"$dir/corpus"
+    val badBatch = Seq(("sha1:abc", third), ("42", base))
+      .toDF("doc_id", "text")
+    intercept[IllegalArgumentException] {
+      IncrementalDedup.processBatch(badBatch, store)
+    }
+    intercept[IllegalArgumentException] {
+      IncrementalDedup.probeStorePairs(badBatch, store)
+    }
+    intercept[IllegalArgumentException] {
+      IncrementalDedup.removeDocs(spark, store, badBatch.select("doc_id"))
+    }
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(store)),
+      "the key check must refuse before the store directory is made")
+    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .exists(_.getPath.getName.startsWith("_meta_")))
   }
 
   test("the admission threshold binds at store creation: the record " +
@@ -668,6 +715,27 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(markers() == Set("_meta_b48_t800000"))
   }
 
+  test("admission finishes a pending re-bucket first; the skip prunes " +
+      "with the new count") {
+    val store = Files.createTempDirectory("incdedupra").toString + "/corpus"
+    val many = (0 until 200).map(i =>
+      (i.toLong, s"$other unique token$i marker${i * 7} tail${i % 13}"))
+      .toDF("doc_id", "text")
+    IncrementalDedup.processBatch(many, store) // default 16 buckets
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    fs.create(new org.apache.hadoop.fs.Path(s"$store/_rebucket_24"), false)
+      .close()
+    // 20 redeliveries: pruned with their stale 16-bucket set inside the
+    // 24-bucket layout, about half of them would miss the skip
+    val r = IncrementalDedup.processBatch(
+      many.filter(col("doc_id") < 20).union(Seq((900L, base))
+        .toDF("doc_id", "text")), store)
+    assert(r == IncrementalDedup.BatchResult(1, 0, 20), s"$r")
+    assert(fs.exists(
+      new org.apache.hadoop.fs.Path(s"$store/_meta_b24_t800000")))
+  }
+
   test("takedown is a tombstone: content gone, id stays down forever") {
     val store = Files.createTempDirectory("incdeduptd").toString + "/corpus"
     IncrementalDedup.processBatch(
@@ -753,6 +821,140 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val r2 = IncrementalDedup.processBatch(
       Seq((11L, third)).toDF("doc_id", "text"), store)
     assert(r2 == IncrementalDedup.BatchResult(0, 0, 1), s"$r2")
+  }
+
+  test("empty, all-redelivered and all-short batches finish as no-ops") {
+    val store = Files.createTempDirectory("incdedupe").toString + "/corpus"
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // every observed pass also fills on a batch with no rows
+    assert(IncrementalDedup.processBatch(empty, store) ==
+      IncrementalDedup.BatchResult(0, 0, 0))
+    assert(IncrementalDedup.probeStorePairs(empty, store).count() == 0)
+    IncrementalDedup.processBatch(
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), store)
+    assert(IncrementalDedup.processBatch(empty, store) ==
+      IncrementalDedup.BatchResult(0, 0, 0))
+    assert(IncrementalDedup.probeStorePairs(empty, store).count() == 0)
+    assert(IncrementalDedup.processBatch(
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), store) ==
+      IncrementalDedup.BatchResult(0, 0, 2))
+    assert(IncrementalDedup.processBatch(
+      Seq((3L, "two words"), (4L, "x")).toDF("doc_id", "text"), store) ==
+      IncrementalDedup.BatchResult(2, 0, 0))
+    assert(IncrementalDedup.probeStorePairs(
+      Seq((5L, "two words")).toDF("doc_id", "text"), store).count() == 0)
+  }
+
+  test("int-typed legacy files widen to the declared BIGINT key") {
+    val store = Files.createTempDirectory("incdedupi").toString + "/corpus"
+    // the legacy flat layout, crafted from INT doc_ids
+    val docs = Seq((1, base), (2, other)).toDF("doc_id", "text")
+    docs.write.parquet(s"$store/docs")
+    graft.dedup.Dedup.minhashBandKeys(
+        graft.dedup.Dedup.minhashSignaturesFromSets(
+          graft.dedup.Dedup.docShingleSets(docs, "doc_id", "text")))
+      .write.parquet(s"$store/bands")
+    assert(spark.read.parquet(s"$store/docs").schema("doc_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    // redelivered 2 skips against the INT files; the near-dup of 1
+    // rejects; 11 lands as a LONG file next to the INT ones
+    val r = IncrementalDedup.processBatch(
+      Seq((2L, other), (10L, base.replace("valley", "meadow")),
+        (11L, third)).toDF("doc_id", "text"), store)
+    assert(r == IncrementalDedup.BatchResult(1, 1, 1), s"$r")
+    val r2 = IncrementalDedup.processBatch(
+      Seq((1L, base), (11L, third)).toDF("doc_id", "text"), store)
+    assert(r2 == IncrementalDedup.BatchResult(0, 0, 2), s"$r2")
+    // the probe reads both file types and pairs with the INT-era doc
+    val p = IncrementalDedup.probeStorePairs(
+      Seq((100L, base.replace("valley", "meadow")), (101L, third))
+        .toDF("doc_id", "text"), store)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(p == Set((1L, 100L), (11L, 101L)), s"$p")
+  }
+
+  /** Spark jobs `f` runs: a public listener counts the jobs of the job
+    * group `f` runs under (AQE stage and broadcast jobs inherit it). A
+    * sentinel job in a second group flushes the listener bus: its
+    * queue delivers in order, so once the sentinel's start arrives,
+    * every job of `f` has been counted. */
+  private def jobsOf(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"budget-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull match {
+          case `group`    => jobs.incrementAndGet()
+          case `sentinel` => flushed.countDown()
+          case _          => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `f` under the given session confs, restoring the previous
+    * values: job counts depend on the join and shuffle plans. */
+  private def withConfs[A](kv: (String, String)*)(f: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("job budget: admission and probe run a fixed, small set of jobs") {
+    withConfs("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB",
+        "spark.sql.shuffle.partitions" -> "4") {
+      val store = Files.createTempDirectory("incdedupj").toString +
+        "/corpus"
+      IncrementalDedup.processBatch((0 until 200).map(i =>
+        (i.toLong, s"$other unique token$i marker${i * 7} tail${i % 13}"))
+        .toDF("doc_id", "text"), store)
+      IncrementalDedup.processBatch(
+        Seq((900L, base)).toDF("doc_id", "text"), store)
+      // an established store; the batch carries every decision kind: a
+      // redelivery, a near-dup of a stored doc, an in-batch chain and
+      // novel docs
+      val batch = Seq((7L, "redelivered"),
+        (901L, base.replace("valley", "meadow")),
+        (1001L, third), (1002L, third.replace("filters", "sieves")),
+        (1003L, third.replace("filters", "sieves")
+          .replace("yet another", "and another")),
+        (1004L, "a novel doc about something else entirely here"))
+        .toDF("doc_id", "text")
+      var r: IncrementalDedup.BatchResult = null
+      val writeJobs = jobsOf { r = IncrementalDedup.processBatch(batch, store) }
+      assert(r == IncrementalDedup.BatchResult(3, 2, 1), s"$r")
+      val probe = Seq((2000L, base.replace("valley", "meadow")),
+        (2001L, third)).toDF("doc_id", "text")
+      var pairs = 0
+      val readJobs = jobsOf {
+        pairs = IncrementalDedup.probeStorePairs(probe, store).collect().length
+      }
+      assert(pairs == 2, s"$pairs") // 900~2000 and 1001~2001
+      assert(writeJobs <= WriteJobBudget,
+        s"processBatch ran $writeJobs jobs, budget $WriteJobBudget")
+      assert(readJobs <= ReadJobBudget,
+        s"probeStorePairs ran $readJobs jobs, budget $ReadJobBudget")
+    }
   }
 
   test("streaming corpus construction: processBatch as a foreachBatch sink") {
