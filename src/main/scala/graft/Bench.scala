@@ -119,7 +119,10 @@ object Bench {
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jsonMap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    // a failed query (-1) is left out of the total, so the count of
+    // failures rides the metric line and a failure is never silent
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (n, v) if v < 0 => n }
     val byName = results.toMap
     val head = headline.flatMap(n => byName.get(n).map(n -> _))
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
@@ -141,9 +144,13 @@ object Bench {
     writeQuietly(fullPath)
     // ALSO drop the full map in the repo working dir: /tmp dies with the
     // host, and round-over-round per-query diffs (what caught the r4
-    // ngram regression) need the map to survive as a committed artifact
-    writeQuietly("BENCH_FULL_latest.json")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(head)},"n_queries":${results.size},"sf":"$sfDir"}""")
+    // ngram regression) need the map to survive as a committed artifact.
+    // Only a full-surface run may replace it: a SPARK_GRAFT_ONLY subset
+    // would overwrite the committed map with a partial one
+    if (only.isEmpty) writeQuietly("BENCH_FULL_latest.json")
+    if (failed.nonEmpty)
+      println(s"[bench] FAILED n=${failed.size} (left out of total): ${failed.mkString(",")}")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(head)},"n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -6,6 +6,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
+import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -13,8 +16,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *
   * `maxRetries` counts attempts AFTER the first; backoff doubles per
   * attempt starting at `backoffMillis`. `maxInFlight` bounds the
-  * per-partition async request window of the bulk operator
-  * ([[graft.pipeline.IngestPipeline.detectPagesHttp]]). */
+  * per-partition [[HttpInferenceService.window]] that every
+  * partition-level call (page and crop detection, whole-crop OCR) uses. */
 final case class HttpEnrichConfig(
     baseUrl: String,
     maxRetries: Int = 3,
@@ -42,11 +45,10 @@ final class EnrichRetriesExhaustedException(msg: String, cause: Throwable)
   *     per-partition construction).
   *   - Bounded retry with exponential backoff on TRANSIENT failures only
   *     (HTTP 5xx and IOExceptions). 4xx and malformed-JSON responses are
-  *     PERMANENT: they throw immediately and the pipeline's
-  *     dead-letter channel (`detectPagesSafe` / `detectPagesHttp`) takes
-  *     the row — the ST6 divergence from the reference, which swallows
-  *     per-image errors and silently drops the image
-  *     (yolo_ocr_utils.py:198-199).
+  *     PERMANENT: they fail immediately and the pipeline's dead-letter
+  *     channel (`detectPagesSafe`) takes the row — the ST6 divergence
+  *     from the reference, which swallows per-image errors and silently
+  *     drops the image (yolo_ocr_utils.py:198-199).
   *   - Response parsing validates the DECLARED schema (a `detections`
   *     array of `{box: [x1,y1,x2,y2], class, confidence}` objects —
   *     yolo_ocr_utils.py:100, 115-118); any shape drift is a permanent
@@ -62,12 +64,16 @@ class HttpInferenceService(cfg: HttpEnrichConfig)
   import HttpInferenceService._
 
   override def detect(imageId: String, model: String): Seq[RawDetection] =
-    parseDetections(
-      postWithRetry(predictUri(imageId, model), imageId, cfg))
+    parseDetections(postWithRetry(predictUri(model), imageId, cfg))
 
   override def extractText(imageId: String): String =
-    parseExtractedText(
-      postWithRetry(URI.create(s"${cfg.baseUrl}/extract_text"), imageId, cfg))
+    parseExtractedText(postWithRetry(ocrUri, imageId, cfg))
+
+  override def detectAll[T](rows: Iterator[T], model: String)(imageId: T => String) =
+    window(rows, predictUri(model), cfg)(imageId)(parseDetections)
+
+  override def extractTextAll[T](rows: Iterator[T])(imageId: T => String) =
+    window(rows, ocrUri, cfg)(imageId)(parseExtractedText)
 
   /** Box-scoped OCR (yolo_ocr_utils.py:37-57): the box rides a JSON
     * side-channel next to the image payload. */
@@ -77,8 +83,10 @@ class HttpInferenceService(cfg: HttpEnrichConfig)
       URI.create(s"${cfg.baseUrl}/extract_text_with_box"), body, cfg))
   }
 
-  private def predictUri(imageId: String, model: String): URI =
+  private def predictUri(model: String): URI =
     URI.create(s"${cfg.baseUrl}/predict?model=$model")
+
+  private def ocrUri: URI = URI.create(s"${cfg.baseUrl}/extract_text")
 }
 
 object HttpInferenceService {
@@ -97,24 +105,23 @@ object HttpInferenceService {
       case c => c.toString
     }
 
-  def request(uri: URI, body: String, cfg: HttpEnrichConfig): HttpRequest =
+  private def request(uri: URI, body: String, cfg: HttpEnrichConfig): HttpRequest =
     HttpRequest.newBuilder(uri)
       .timeout(Duration.ofMillis(cfg.requestTimeoutMillis))
       .header("Content-Type", "application/octet-stream")
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
       .build()
 
-  /** Classify a completed exchange: Right(body) on 200, Left(permanent
-    * exception) on 4xx, Left(retriable marker) on 5xx. */
-  private def classify(resp: HttpResponse[String], uri: URI)
-      : Either[Either[Exception, Exception], String] =
+  /** Classify a completed exchange: Right(body) on 200, Left(transient)
+    * on 5xx, Left([[PermanentEnrichException]]) on anything else. */
+  private def classify(resp: HttpResponse[String], uri: URI): Either[Throwable, String] = {
+    def msg = s"HTTP ${resp.statusCode()} from $uri: ${resp.body()}"
     resp.statusCode() match {
       case 200 => Right(resp.body())
-      case s if s >= 500 => Left(Right(new RuntimeException(
-        s"HTTP $s from $uri: ${resp.body()}")))
-      case s => Left(Left(new PermanentEnrichException(
-        s"HTTP $s from $uri: ${resp.body()}")))
+      case s if s >= 500 => Left(new RuntimeException(msg))
+      case _ => Left(new PermanentEnrichException(msg))
     }
+  }
 
   /** Synchronous bounded-retry POST: transient failures (5xx / IO) back
     * off exponentially for up to `cfg.maxRetries` re-attempts; permanent
@@ -129,8 +136,8 @@ object HttpInferenceService {
         classify(sharedClient.send(request(uri, body, cfg),
             HttpResponse.BodyHandlers.ofString()), uri) match {
           case Right(ok) => return ok
-          case Left(Left(permanent)) => throw permanent
-          case Left(Right(transient)) => lastTransient = transient
+          case Left(permanent: PermanentEnrichException) => throw permanent
+          case Left(transient) => lastTransient = transient
         }
       } catch {
         case e: java.io.IOException => lastTransient = e
@@ -141,6 +148,47 @@ object HttpInferenceService {
       s"retries exhausted after ${cfg.maxRetries + 1} attempts: $uri",
       lastTransient)
   }
+
+  /** The one async window of partition-level calls (the reference's loop
+    * is sequential, yolo_ocr_utils.py:82): at most `cfg.maxInFlight` first
+    * attempts per partition, the next sent as soon as the oldest settles;
+    * rows come back in input order. A transient first attempt falls back
+    * to [[postWithRetry]] with the remaining budget before the window
+    * refills, so a retry never exceeds the bound; a 4xx or a malformed
+    * body is permanent and never retried. Parallelism is partitions x
+    * maxInFlight: the endpoint governs throughput, not a global pool. */
+  def window[T, R](rows: Iterator[T], uri: URI, cfg: HttpEnrichConfig)(
+      body: T => String)(parse: String => R): Iterator[(T, Either[Throwable, R])] =
+    new Iterator[(T, Either[Throwable, R])] {
+      private val sent = scala.collection.mutable.Queue
+        .empty[(T, CompletableFuture[HttpResponse[String]])]
+      private def fill(): Unit =
+        while (sent.size < math.max(1, cfg.maxInFlight) && rows.hasNext) {
+          val r = rows.next()
+          sent.enqueue(r -> sharedClient.sendAsync(request(uri, body(r), cfg),
+            HttpResponse.BodyHandlers.ofString()))
+        }
+      def hasNext: Boolean = { fill(); sent.nonEmpty }
+      def next(): (T, Either[Throwable, R]) = {
+        fill()
+        val (r, fut) = sent.dequeue()
+        val first = try classify(fut.join(), uri) catch {
+          case e: CompletionException => Left(Option(e.getCause).getOrElse(e))
+        }
+        val settled = first match {
+          case Left(_: PermanentEnrichException) => first
+          // the async attempt spent try #1; the sync path gets the rest
+          case Left(_) if cfg.maxRetries >= 1 => Try(postWithRetry(uri, body(r),
+            cfg.copy(maxRetries = cfg.maxRetries - 1))).toEither
+          case Left(transient) => Left(new EnrichRetriesExhaustedException(
+            s"retries exhausted after 1 attempt: $uri", transient))
+          case ok => ok
+        }
+        val out = r -> settled.flatMap(b => Try(parse(b)).toEither)
+        fill()
+        out
+      }
+    }
 
   /** Parse the `/predict` response against the DECLARED schema
     * (yolo_ocr_utils.py:100: `{"detections": [{"box": [x1,y1,x2,y2],

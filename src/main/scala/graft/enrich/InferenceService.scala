@@ -2,17 +2,19 @@ package graft.enrich
 
 import graft.model.RawDetection
 
-import scala.io.Source
-
 /** External-enrichment boundary (SURVEY §2.9): inference and OCR are
   * side-effecting network services in the reference
   * (yolo_ocr_utils.py:21-57, 92-103), so they live behind traits invoked
-  * from `mapPartitions`/typed `flatMap` — NOT inside Catalyst expressions —
-  * keeping nondeterministic I/O out of expression land where the optimizer
-  * could reorder or re-execute it. Pipelines should persist/checkpoint
-  * right after an enrichment stage.
+  * from `mapPartitions` — NOT inside Catalyst expressions — keeping
+  * nondeterministic I/O out of expression land where the optimizer could
+  * reorder or re-execute it. Pipelines should persist/checkpoint right
+  * after an enrichment stage.
   *
-  * A production implementation holds one HTTP client per partition; the
+  * Partition-level contract: pipelines call `detectAll`/`extractTextAll`
+  * once per partition; each returns every row in input order with its own
+  * outcome, and the caller dead-letters or rethrows a `Left`. The defaults
+  * call the per-row method row by row; [[HttpInferenceService]] overrides
+  * them with one bounded async window over one HTTP client per JVM. The
   * bundled [[FixtureInferenceService]] is the deterministic fake used by
   * tests and the driver's correctness gate.
   */
@@ -20,11 +22,19 @@ trait InferenceService extends Serializable {
   /** All detections for an image; `model` selects the stage
     * ("model1" page-level / "model2" crop-level, data_pipeline.py:53, 87). */
   def detect(imageId: String, model: String): Seq[RawDetection]
+
+  def detectAll[T](rows: Iterator[T], model: String)(imageId: T => String)
+      : Iterator[(T, Either[Throwable, Seq[RawDetection]])] =
+    rows.map(r => r -> scala.util.Try(detect(imageId(r), model)).toEither)
 }
 
 trait OcrService extends Serializable {
   /** Whole-image OCR (yolo_ocr_utils.py:21-34). */
   def extractText(imageId: String): String
+
+  def extractTextAll[T](rows: Iterator[T])(imageId: T => String)
+      : Iterator[(T, Either[Throwable, String])] =
+    rows.map(r => r -> scala.util.Try(extractText(imageId(r))).toEither)
 }
 
 /** Deterministic fake backed by bundled TSV fixtures (classpath

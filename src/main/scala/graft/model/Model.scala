@@ -62,5 +62,3 @@ final case class CropImage(
     shop_name: String,
     width: Int,
     height: Int)
-
-final case class BoundingBox(x1: Int, y1: Int, x2: Int, y2: Int)

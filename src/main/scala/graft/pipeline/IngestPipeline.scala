@@ -15,10 +15,11 @@ import graft.text.NameCorrection
   *         -> last-wins class routing -> correctName / processPrice
   *         -> detected_data
   *
-  * Enrichment stages ([detect]) cross the external-service boundary via
-  * typed flatMap (SURVEY §2.9) and should be persisted by callers before
-  * reuse; everything else is declarative so Catalyst optimizes the whole
-  * plan. At cluster scale the per-image aggregations shuffle on image_id
+  * Enrichment stages ([detect], OCR) cross the external-service boundary
+  * through `mapPartitions` over the services' partition-level calls
+  * (SURVEY §2.9) and should be persisted by callers before reuse;
+  * everything else is declarative so Catalyst optimizes the whole plan.
+  * At cluster scale the per-image aggregations shuffle on image_id
   * (high-cardinality, well distributed) and every other stage is narrow.
   */
 object IngestPipeline {
@@ -36,17 +37,26 @@ object IngestPipeline {
       .withColumn("py2", least(col("height"), col("y2") + padH))
   }
 
+  private def detections(id: String, shop: String, width: Int, height: Int,
+      ds: Seq[RawDetection]): Seq[ImageDetection] =
+    ds.map(d => ImageDetection(id, shop, width, height, d.idx, d.class_name,
+      d.x1, d.y1, d.x2, d.y2, d.confidence, d.ocr_text))
+
+  /** A failed enrichment row fails the action, naming the image. */
+  private def orFail[R](id: String, r: Either[Throwable, R]): R =
+    r.fold(e => throw new RuntimeException(
+      s"enrichment of $id failed: ${e.getMessage}", e), identity)
+
   /** Run the inference service over images — the enrichment boundary. */
   def detectPages(
       pages: Dataset[PageImage],
       svc: InferenceService,
       model: String): Dataset[ImageDetection] = {
     import pages.sparkSession.implicits._
-    pages.flatMap { p =>
-      svc.detect(p.image_id, model).map(d =>
-        ImageDetection(p.image_id, p.shop_name, p.width, p.height, d.idx,
-          d.class_name, d.x1, d.y1, d.x2, d.y2, d.confidence, d.ocr_text))
-    }
+    pages.mapPartitions(it => svc.detectAll(it, model)(_.image_id).flatMap {
+      case (p, r) => detections(p.image_id, p.shop_name, p.width, p.height,
+        orFail(p.image_id, r))
+    })
   }
 
   /** ST6 divergence: the reference swallows per-image errors and silently
@@ -59,18 +69,14 @@ object IngestPipeline {
       svc: InferenceService,
       model: String): (Dataset[ImageDetection], Dataset[EnrichError]) = {
     import pages.sparkSession.implicits._
-    val attempted = pages.map { p =>
-      scala.util.Try(svc.detect(p.image_id, model)) match {
-        case scala.util.Success(ds) =>
-          (ds.map(d => ImageDetection(p.image_id, p.shop_name, p.width,
-            p.height, d.idx, d.class_name, d.x1, d.y1, d.x2, d.y2,
-            d.confidence, d.ocr_text)),
+    val attempted = pages.mapPartitions(it =>
+      svc.detectAll(it, model)(_.image_id).map {
+        case (p, Right(ds)) =>
+          (detections(p.image_id, p.shop_name, p.width, p.height, ds),
             None: Option[EnrichError])
-        case scala.util.Failure(e) =>
-          (Seq.empty[ImageDetection],
-            Some(EnrichError(p.image_id, String.valueOf(e.getMessage))))
-      }
-    }
+        case (p, Left(e)) => (Seq.empty[ImageDetection],
+          Some(EnrichError(p.image_id, String.valueOf(e.getMessage))))
+      })
     // persist BEFORE splitting: the success and error channels are two
     // separate jobs over the same mapped dataset — unpersisted, each
     // would re-run svc.detect per page, and a transiently-failing
@@ -80,91 +86,22 @@ object IngestPipeline {
     (materialized.flatMap(_._1), materialized.flatMap(_._2))
   }
 
-  /** HTTP twin of [[detectPagesSafe]]: one POST per image against the
-    * enrichment service, issued through a BOUNDED per-partition async
-    * window (`cfg.maxInFlight` requests in flight at once — the
-    * batching knob; the reference's loop is strictly sequential,
-    * yolo_ocr_utils.py:82). First attempts ride the async window; an
-    * image whose first attempt fails transiently falls back to the
-    * synchronous bounded-retry path with the remaining retry budget —
-    * retries are the rare case, so they never stall the window.
-    * Permanent failures (4xx, malformed JSON) take the dead-letter
-    * channel immediately, per row, exactly like [[detectPagesSafe]].
-    *
-    * Scale shape: no driver involvement, no shuffle — enrichment
-    * parallelism is partitions x maxInFlight; the service endpoint is
-    * the throughput governor, which is why the window is a per-request
-    * knob and not a global pool. */
+  /** [[detectPagesSafe]] over HTTP: requests ride the service's bounded
+    * async [[graft.enrich.HttpInferenceService.window]]. */
   def detectPagesHttp(
       pages: Dataset[PageImage],
       cfg: graft.enrich.HttpEnrichConfig,
-      model: String): (Dataset[ImageDetection], Dataset[EnrichError]) = {
-    import pages.sparkSession.implicits._
-    import graft.enrich.HttpInferenceService
-    val attempted = pages.mapPartitions { it =>
-      val uri = java.net.URI.create(s"${cfg.baseUrl}/predict?model=$model")
-      it.grouped(math.max(1, cfg.maxInFlight)).flatMap { group =>
-        val inFlight = group.map { p =>
-          (p, HttpInferenceService.sharedClient.sendAsync(
-            HttpInferenceService.request(uri, p.image_id, cfg),
-            java.net.http.HttpResponse.BodyHandlers.ofString()))
-        }
-        inFlight.map { case (p, fut) =>
-          val body: Either[Throwable, String] =
-            try {
-              val resp = fut.join()
-              if (resp.statusCode() == 200) Right(resp.body())
-              else if (resp.statusCode() >= 500) Left(new RuntimeException(
-                s"HTTP ${resp.statusCode()} from $uri: ${resp.body()}"))
-              else Left(new graft.enrich.PermanentEnrichException(
-                s"HTTP ${resp.statusCode()} from $uri: ${resp.body()}"))
-            } catch {
-              case e: java.util.concurrent.CompletionException =>
-                Left(if (e.getCause != null) e.getCause else e)
-            }
-          val recovered: Either[Throwable, String] = body match {
-            case Left(_: graft.enrich.PermanentEnrichException) => body
-            case Left(transient) if cfg.maxRetries >= 1 =>
-              // the async attempt spent try #1; give the sync path the rest
-              try Right(HttpInferenceService.postWithRetry(uri, p.image_id,
-                cfg.copy(maxRetries = cfg.maxRetries - 1)))
-              catch { case e: Exception => Left(e) }
-            case Left(transient) =>
-              Left(new graft.enrich.EnrichRetriesExhaustedException(
-                s"retries exhausted after 1 attempt: $uri", transient))
-            case ok => ok
-          }
-          recovered.flatMap { b =>
-            try Right(HttpInferenceService.parseDetections(b))
-            catch { case e: Exception => Left(e) }
-          } match {
-            case Right(ds) =>
-              (ds.map(d => ImageDetection(p.image_id, p.shop_name, p.width,
-                p.height, d.idx, d.class_name, d.x1, d.y1, d.x2, d.y2,
-                d.confidence, d.ocr_text)),
-                None: Option[EnrichError])
-            case Left(e) =>
-              (Seq.empty[ImageDetection],
-                Some(EnrichError(p.image_id, String.valueOf(e.getMessage))))
-          }
-        }
-      }
-    }
-    // same persist-before-split discipline as detectPagesSafe: the two
-    // channels are two jobs; unpersisted, every page would be POSTed twice
-    val materialized = attempted.persist()
-    (materialized.flatMap(_._1), materialized.flatMap(_._2))
-  }
+      model: String): (Dataset[ImageDetection], Dataset[EnrichError]) =
+    detectPagesSafe(pages, new graft.enrich.HttpInferenceService(cfg), model)
 
   def detectCrops(
       crops: Dataset[CropImage],
       svc: InferenceService): Dataset[ImageDetection] = {
     import crops.sparkSession.implicits._
-    crops.flatMap { c =>
-      svc.detect(c.image_id, "model2").map(d =>
-        ImageDetection(c.image_id, c.shop_name, c.width, c.height, d.idx,
-          d.class_name, d.x1, d.y1, d.x2, d.y2, d.confidence, d.ocr_text))
-    }
+    crops.mapPartitions(it => svc.detectAll(it, "model2")(_.image_id).flatMap {
+      case (c, r) => detections(c.image_id, c.shop_name, c.width, c.height,
+        orFail(c.image_id, r))
+    })
   }
 
   /** item_detection_data: per image, detections grouped by class with
@@ -207,8 +144,9 @@ object IngestPipeline {
   /** Whole-crop OCR enrichment (got_text_from_image, data_pipeline.py:93-99). */
   def wholeImageOcr(crops: Dataset[CropImage], svc: OcrService): DataFrame = {
     import crops.sparkSession.implicits._
-    crops.map(c => (c.image_id, svc.extractText(c.image_id)))
-      .toDF("image_id", "whole_image_ocr_text")
+    crops.mapPartitions(it => svc.extractTextAll(it)(_.image_id).map {
+      case (c, r) => (c.image_id, orFail(c.image_id, r))
+    }).toDF("image_id", "whole_image_ocr_text")
   }
 
   /** Final detected_data assembly (data_pipeline.py:104-140):

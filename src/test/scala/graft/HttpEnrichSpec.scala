@@ -1,7 +1,7 @@
 package graft
 
 import graft.enrich.{FixtureInferenceService, HttpEnrichConfig, HttpInferenceService}
-import graft.model.PageImage
+import graft.model.{CropImage, PageImage}
 import graft.pipeline.IngestPipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -19,7 +19,8 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
   * JDK httpserver stub (zero egress): success parity with the fixture
   * services, transient-5xx retry, permanent-4xx dead-letter,
   * malformed-JSON-vs-declared-schema, retry exhaustion, and the bounded
-  * per-partition async window. */
+  * per-partition async window that page detection, crop detection and
+  * whole-crop OCR share. */
 class HttpEnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -58,6 +59,16 @@ class HttpEnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def handle(ex: HttpExchange): Unit = {
     val cur = inFlight.incrementAndGet()
     peakInFlight.updateAndGet(p => math.max(p, cur))
+    // leave the in-flight count BEFORE the reply goes out: a client sends
+    // its next request only after reading a reply, so two requests sent
+    // one after the other never overlap in the count, however late this
+    // handler thread gets scheduled after its reply
+    var open = true
+    def reply(status: Int, body: String): Unit = {
+      open = false
+      inFlight.decrementAndGet()
+      respond(ex, status, body)
+    }
     try {
       if (delayMillis > 0) Thread.sleep(delayMillis)
       val path = ex.getRequestURI.getPath
@@ -67,13 +78,13 @@ class HttpEnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
       requestCounts.computeIfAbsent(id, _ => new AtomicInteger).incrementAndGet()
       val t = transient503.get(id)
       if (t != null && t.getAndDecrement() > 0) {
-        respond(ex, 503, "transient overload"); return
+        reply(503, "transient overload"); return
       }
       if (permanent422.contains(id)) {
-        respond(ex, 422, "unprocessable image"); return
+        reply(422, "unprocessable image"); return
       }
       if (malformed.contains(id)) {
-        respond(ex, 200, "not json {{"); return
+        reply(200, "not json {{"); return
       }
       path match {
         case "/predict" =>
@@ -90,14 +101,14 @@ class HttpEnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
             n.put("confidence", d.confidence)
             d.ocr_text.foreach(n.put("ocr_text", _))
           }
-          respond(ex, 200, mapper.writeValueAsString(root))
+          reply(200, mapper.writeValueAsString(root))
         case "/extract_text" | "/extract_text_with_box" =>
           val root = mapper.createObjectNode()
           root.put("extracted_text", fixture.extractText(id))
-          respond(ex, 200, mapper.writeValueAsString(root))
-        case _ => respond(ex, 404, s"no route $path")
+          reply(200, mapper.writeValueAsString(root))
+        case _ => reply(404, s"no route $path")
       }
-    } finally inFlight.decrementAndGet()
+    } finally if (open) inFlight.decrementAndGet()
   }
 
   override def beforeAll(): Unit = {
@@ -232,5 +243,90 @@ class HttpEnrichSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ok.collect().map(_.image_id).toSet == Set(okId),
       "flaky id recovers via sync fallback but has no fixture detections")
     assert(count(flakyId) == 2, "async first attempt + one sync retry")
+  }
+
+  /** One partition, input order kept: the window's ordering is visible. */
+  private def onePartition(rows: Seq[CropImage]) = {
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(rows, 1))
+  }
+
+  private def crop(id: String) =
+    CropImage(id, "page.png", "shop", 40, 30)
+
+  test("crop window: detection and OCR overlap up to maxInFlight, never above") {
+    val crops = onePartition((1 to 12).map(i => crop(s"crop-win-$i.png")))
+    def peakOf(run: => Unit): Int = {
+      peakInFlight.set(0); inFlight.set(0)
+      run
+      peakInFlight.get()
+    }
+    delayMillis = 40L
+    try {
+      val svc4 = new HttpInferenceService(cfg(maxInFlight = 4))
+      val svc1 = new HttpInferenceService(cfg(maxInFlight = 1))
+      val runs = Seq[(String, HttpInferenceService => Unit)](
+        "detectCrops" -> (svc => IngestPipeline.detectCrops(crops, svc).collect()),
+        "wholeImageOcr" -> (svc => IngestPipeline.wholeImageOcr(crops, svc).collect()))
+      runs.foreach { case (stage, run) =>
+        val p4 = peakOf(run(svc4))
+        assert(p4 >= 2 && p4 <= 4, s"$stage, window of 4: peak=$p4")
+        val p1 = peakOf(run(svc1))
+        assert(p1 == 1, s"$stage, window of 1: peak=$p1")
+      }
+    } finally delayMillis = 0L
+  }
+
+  test("crop window: one transient 503 recovers with exactly 2 requests") {
+    val svc = new HttpInferenceService(cfg(maxRetries = 3))
+    val detId = "crop-flaky-det.png"
+    val ocrId = "crop-flaky-ocr.png"
+    transient503.put(detId, new AtomicInteger(1))
+    transient503.put(ocrId, new AtomicInteger(1))
+    delayMillis = 5L
+    try {
+      val det = IngestPipeline.detectCrops(
+        onePartition(Seq(crop("crop-ok-1.png"), crop(detId), crop("crop-ok-2.png"))),
+        svc).collect()
+      assert(det.isEmpty, "unknown crop ids detect to empty")
+      assert(count(detId) == 2, "async first attempt + one sync retry")
+      val ocr = IngestPipeline.wholeImageOcr(
+        onePartition(Seq(crop("crop-ok-3.png"), crop(ocrId))), svc).collect()
+      assert(ocr.map(_.getString(0)).toSeq == Seq("crop-ok-3.png", ocrId))
+      assert(count(ocrId) == 2, "async first attempt + one sync retry")
+    } finally delayMillis = 0L
+  }
+
+  test("crop window: a 422 crop fails the action and names the crop") {
+    val svc = new HttpInferenceService(cfg(maxRetries = 3))
+    val badId = "crop-rejected.png"
+    permanent422.add(badId)
+    val crops = onePartition(Seq(crop("crop-fine.png"), crop(badId)))
+    val stages = Seq[(String, () => Unit)](
+      "detectCrops" -> (() => IngestPipeline.detectCrops(crops, svc).collect()),
+      "wholeImageOcr" -> (() => IngestPipeline.wholeImageOcr(crops, svc).collect()))
+    stages.foreach { case (stage, run) =>
+      val e = intercept[org.apache.spark.SparkException](run())
+      assert(e.getMessage.contains(badId) && e.getMessage.contains("422"),
+        s"$stage: ${e.getMessage}")
+    }
+  }
+
+  test("crop window: output equals the sequential fixture services row for row") {
+    val rows = IngestPipeline.crops(IngestPipeline.detectPages(
+      graft.pipeline.PipelineFixtures.pages(spark), fixture, "model1"))
+      .collect().toSeq.sortBy(_.image_id)
+    val crops = onePartition(rows)
+    val svc = new HttpInferenceService(cfg(maxInFlight = 4))
+    delayMillis = 2L
+    try {
+      val viaHttp = IngestPipeline.detectCrops(crops, svc).collect().toSeq
+      val viaFixture = IngestPipeline.detectCrops(crops, fixture).collect().toSeq
+      assert(viaHttp.nonEmpty && viaHttp == viaFixture)
+      val ocrHttp = IngestPipeline.wholeImageOcr(crops, svc).collect().toSeq
+      val ocrFixture = IngestPipeline.wholeImageOcr(crops, fixture).collect().toSeq
+      assert(ocrHttp.map(_.getString(0)) == rows.map(_.image_id))
+      assert(ocrHttp == ocrFixture)
+    } finally delayMillis = 0L
   }
 }
