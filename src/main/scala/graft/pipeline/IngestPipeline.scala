@@ -77,12 +77,20 @@ object IngestPipeline {
         case (p, Left(e)) => (Seq.empty[ImageDetection],
           Some(EnrichError(p.image_id, String.valueOf(e.getMessage))))
       })
-    // persist BEFORE splitting: the success and error channels are two
-    // separate jobs over the same mapped dataset — unpersisted, each
+    // materialise BEFORE splitting: the success and error channels are
+    // two separate jobs over the same mapped dataset — recomputed, each
     // would re-run svc.detect per page, and a transiently-failing
     // service could land an image in BOTH channels (or neither),
-    // breaking exactly the dead-letter contract this exists for
-    val materialized = attempted.persist()
+    // breaking exactly the dead-letter contract this exists for. The lazy
+    // local checkpoint is stored by the first job over either channel and
+    // cuts the lineage; unlike persist() it leaves no cache entry that no
+    // caller could unpersist — its blocks go with the returned datasets.
+    // Two costs of that choice: the checkpoint plans and executes `pages`
+    // here, so under AQE any shuffle upstream of it runs at this call,
+    // not at the first read of a channel (the HTTP and fixture callers
+    // pass exchange-free inputs); and a lost checkpoint block fails the
+    // job instead of recomputing, which would call the service again
+    val materialized = attempted.localCheckpoint(eager = false)
     (materialized.flatMap(_._1), materialized.flatMap(_._2))
   }
 

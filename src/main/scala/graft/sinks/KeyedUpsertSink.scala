@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,13 +16,55 @@ import org.apache.spark.sql.functions._
   * the same incremental-update discipline as the reference's per-item
   * puts (and a MERGE on Delta/Iceberg drops in behind the same
   * signature).
+  *
+  * Sizing of [[NumBuckets]]: each touched bucket is one parquet file per
+  * write task, and a partitioned write pays about 15–50 ms per extra file,
+  * while a batch of k keys rewrites about 1 - (1 - 1/NumBuckets)^k of the
+  * store. Measured on a 4-core host with the fixture's detected rows:
+  *  - a bulk batch into a fresh store (243 keys, the `ingest_bulk`
+  *    benchmark) touched 62 of 64 buckets, so 64 wrote 62 files where 8
+  *    writes 8;
+  *  - per-flyer batches merged into one growing store, as `IngestJob`
+  *    does (1–12 keys, median 6, so about 55% of the store rewritten with
+  *    8 buckets and 9% with 64): a batch took 0.60–0.92 s with 8 buckets
+  *    against 1.17–1.41 s with 64 for stores of 250–24,000 rows, since a
+  *    64-bucket store also fragments into one file per write task per
+  *    touched bucket (495 files at 1,210 rows, against 35); the rewrite
+  *    grows with the store, and 8 buckets took 1.73 s against 1.38 s at
+  *    242,000 rows and 2.16 s against 1.49 s at 484,000.
+  * So 8 suits stores up to roughly 150,000 rows under batches of this
+  * size (the interpolated crossover; larger batches touch more of 64
+  * buckets too, which narrows 64's advantage). A store that grows well
+  * past that under small batches needs more buckets, each written as one
+  * file.
+  *
+  * A store written with more buckets cannot be merged: its rows would
+  * sit in buckets the current hash never touches, so an upsert of their
+  * keys would duplicate them. The merge path therefore refuses a store
+  * with any `__bucket=` value of [[NumBuckets]] or more. The check is
+  * exact for the old 64-bucket layout: 8 divides 64, so a key whose
+  * 64-bucket value is below 8 has that same value as its 8-bucket one,
+  * and a store holding only buckets 0–7 is a valid 8-bucket store.
   */
 object KeyedUpsertSink {
 
-  val NumBuckets = 64
+  val NumBuckets = 8
+
+  private val BucketDir = "__bucket="
 
   private def withBucket(df: DataFrame, keyCol: String): DataFrame =
     df.withColumn("__bucket", pmod(hash(col(keyCol)), lit(NumBuckets)))
+
+  /** Fails, naming the directory, when `store` holds a bucket outside the
+    * current layout — before anything is read or written. */
+  private def requireBucketLayout(fs: FileSystem, store: Path): Unit =
+    fs.listStatus(store).iterator.map(_.getPath)
+      .filter(_.getName.startsWith(BucketDir))
+      .find(p => !p.getName.stripPrefix(BucketDir).toIntOption
+        .exists(b => b >= 0 && b < NumBuckets))
+      .foreach(p => throw new IllegalStateException(
+        s"keyed store $store has bucket directory $p outside 0..${NumBuckets - 1}: " +
+          s"it was written with a different bucket count and cannot be merged"))
 
   def upsert(batch: DataFrame, path: String, keyCol: String): Unit = {
     val spark = batch.sparkSession
@@ -48,18 +91,21 @@ object KeyedUpsertSink {
         .agg(max_by(struct(valueCols.map(col): _*),
           md5(to_json(struct(batch.columns.map(col): _*)))).as("__row"))
         .select(col(keyCol) +: valueCols.map(c => col(s"__row.$c").as(c)): _*)
-    val incoming = withBucket(oneRowPerKey, keyCol).cache()
+    val incoming = withBucket(oneRowPerKey, keyCol)
     try {
       // Hadoop FS resolution, not java.io.File: the store may live on
       // HDFS/S3/any Hadoop-supported FS; a local-only check would miss an
       // existing remote store and dynamic overwrite would then drop every
       // previously stored row in the touched buckets
-      val hadoopPath = new org.apache.hadoop.fs.Path(path)
+      val hadoopPath = new Path(path)
       val fs = hadoopPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val exists = fs.exists(hadoopPath)
       val merged =
-        if (!exists) incoming
+        if (!fs.exists(hadoopPath)) incoming // read once, by the write
         else {
+          requireBucketLayout(fs, hadoopPath)
+          // read three times below: cached so the batch (and any
+          // enrichment upstream of it) is computed once
+          incoming.cache()
           val touched = incoming.select(col("__bucket")).distinct()
           val existing = spark.read.parquet(path)
             .join(broadcast(touched), Seq("__bucket"), "left_semi")
