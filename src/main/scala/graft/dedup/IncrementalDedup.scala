@@ -16,18 +16,18 @@ import org.apache.spark.sql.functions._
   * Both stores are HASH-BUCKETED hive partitions (`b=<k>`, Murmur3 of
   * the key mod the store's bucket count, recorded once — together
   * with the admission-threshold ppm — in a fused `_meta_b<n>_t<ppm>`
-  * creation record; legacy r18 `_buckets_`/`_threshold_` marker pairs
-  * fold into it on first touch): docs bucket on doc_id, bands on
-  * the band key. Every store-side read an admission batch performs —
+  * creation record): docs bucket on doc_id, bands on the band key.
+  * Every store-side read an admission batch performs —
   * the redelivery skip, the band-index probe, the matched-docs fetch
   * for the rescore — statically prunes to the buckets the BATCH's keys
   * hash to (the read-only probe's docs fetch prunes dynamically off
   * its candidate join instead), so per-batch I/O is |batch's buckets|
   * x (|corpus| / buckets), never a corpus scan; at 10B docs a
   * deployment inits with O(1000) buckets and a batch touches a sliver.
-  * A legacy FLAT store (no marker) backfills into the bucketed layout
-  * on first touch — one columnar scan per tree, committed by an atomic
-  * directory rename, re-runnable after a crash.
+  * A store that holds content but no creation record (a retired flat
+  * or two-marker layout, or a record deleted by hand) is refused with
+  * its path, never adopted or rewritten: the record is the only
+  * statement of the regime its content was admitted under.
   *
   * Per batch, candidate generation touches only band-key matches (an
   * equi-join of the batch's band keys against the PRUNED index — at
@@ -90,9 +90,7 @@ object IncrementalDedup {
     * an explicit O(store) rewrite, never a silent reinterpretation. */
   val DefaultStoreBuckets = 16
 
-  private val BucketsRe = "_buckets_(\\d+)".r
   private val RebucketRe = "_rebucket_(\\d+)".r
-  private val ThresholdRe = "_threshold_(\\d+)".r
   private val MetaRe = "_meta_b(\\d+)_t(\\d+)".r
 
   private def thresholdPpm(t: Double): Long = math.round(t * 1000000L)
@@ -114,9 +112,10 @@ object IncrementalDedup {
     (hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
   }
 
-  /** The docs tree holds ANY rows (live or tombstoned, bucketed or
-    * legacy flat) — the store is ESTABLISHED: creation-race
-    * arbitration must never apply to it (see [[metaOf]]). */
+  /** The docs tree holds ANY rows (live or tombstoned, in any
+    * layout) — the store is ESTABLISHED: it must carry a creation
+    * record ([[settle]]), and creation-race arbitration must never
+    * apply to it (see [[metaOf]]). */
   private def storeHasContent(spark: SparkSession, store: String): Boolean =
     hasRows(spark, docsPath(store))
 
@@ -127,11 +126,10 @@ object IncrementalDedup {
     else fs.listStatus(hp).toSeq.filter(_.isFile).map(_.getPath.getName)
   }
 
-  /** All fused creation-record markers, as (ppm, buckets) sorted. */
-  private def metaMarkers(spark: SparkSession,
-      store: String): Seq[(Long, Int)] =
-    markerNames(spark, store)
-      .collect { case MetaRe(b, t) => (t.toLong, b.toInt) }.sorted
+  /** The fused creation-record markers among the store root's marker
+    * `names`, as (ppm, buckets) sorted. */
+  private def metaMarkers(names: Seq[String]): Seq[(Long, Int)] =
+    names.collect { case MetaRe(b, t) => (t.toLong, b.toInt) }.sorted
 
   /** The store's CREATION RECORD — one fused `_meta_b<n>_t<ppm>`
     * marker holding bucket count and admission-threshold ppm, written
@@ -154,7 +152,7 @@ object IncrementalDedup {
     * consulting this record. */
   private def metaOf(spark: SparkSession,
       store: String): Option[(Int, Long)] = {
-    val marks = metaMarkers(spark, store)
+    val marks = metaMarkers(markerNames(spark, store))
     if (marks.isEmpty) None
     else if (marks.size == 1) Some((marks.head._2, marks.head._1))
     else if (storeHasContent(spark, store))
@@ -178,26 +176,28 @@ object IncrementalDedup {
     }
   }
 
-  /** Legacy (r18 two-marker) forms, read for migration only. */
-  private def legacyBucketsOf(spark: SparkSession,
-      store: String): Option[Int] =
-    markerNames(spark, store).collectFirst { case BucketsRe(n) => n.toInt }
-
-  private def legacyThresholdsOf(spark: SparkSession,
-      store: String): Seq[Long] =
-    markerNames(spark, store).collect { case ThresholdRe(n) => n.toLong }
-      .sorted
-
-  private def deleteLegacyMarkers(spark: SparkSession,
-      store: String): Unit = {
-    val (fs, hp) = fsOf(spark, store)
-    if (fs.exists(hp)) fs.listStatus(hp).foreach { f =>
-      f.getPath.getName match {
-        case BucketsRe(_) | ThresholdRe(_) if f.isFile =>
-          fs.delete(f.getPath, false)
-        case _ => ()
-      }
-    }
+  /** Bring the store to the layout its creation record describes
+    * before any caller reads the record: finish or unwind a crashed
+    * [[swapTree]], refuse content without a creation record, then
+    * finish a pending [[rebucketStore]] intent. A store that holds
+    * documents but no record — a retired flat or two-marker layout, or
+    * a record deleted by hand — is refused with its path and left
+    * untouched, never adopted: nothing on disk says which bucket count
+    * and admission regime its content was written under. The refusal
+    * reads the raw markers, not [[metaOf]], and runs BEFORE the intent
+    * finishes: mid-rebucket two fused markers coexist, the benign
+    * window [[metaOf]] would misread as an interloper. */
+  private def settle(spark: SparkSession, store: String): Unit = {
+    recoverSwap(spark, store)
+    val names = markerNames(spark, store)
+    if (metaMarkers(names).isEmpty && storeHasContent(spark, store))
+      throw new IllegalStateException(
+        s"$store holds documents but no _meta_b<n>_t<ppm> creation " +
+          "record — a retired store format, or a record removed by " +
+          "hand; refusing to guess the bucket count and admission " +
+          "threshold its content was written under. Re-admit its " +
+          "documents into a fresh store with processBatch.")
+    pendingRebucket(names).foreach(n => doRebucket(spark, store, n))
   }
 
   /** Resolve — or create — the store's creation record and gate this
@@ -208,80 +208,38 @@ object IncrementalDedup {
     * (change of regime = [[rebuildStoreThreshold]] into a fresh
     * store, never a flag flip). `None` is a call with no admission
     * opinion (probes, compaction, takedown, re-bucket) — it resolves
-    * the record without gating, and a record it must CREATE (legacy
-    * store) adopts the session default. API carve-out (documented on
-    * [[processBatch]]): an explicit threshold that happens to EQUAL
-    * the session default is indistinguishable from a defaulted call
-    * and follows the marker rather than refusing.
-    *
-    * Legacy migration: a store carrying the r18 two-marker form
-    * (`_buckets_<n>` / `_threshold_<ppm>`) folds both into the fused
-    * record on first touch and drops the legacy files; a PRE-MARKER
-    * content-bearing store (no threshold ever recorded) adopts the
-    * calling/default value and says so LOUDLY on stderr — the
-    * operator of a store that was drained at a non-default threshold
-    * must hear that an upgrade just recorded a different regime. */
+    * the record without gating, and a record it must CREATE adopts
+    * the session default. A record is only ever created on a store
+    * with no content ([[settle]] refuses the rest). API carve-out
+    * (documented on [[processBatch]]): an explicit threshold that
+    * happens to EQUAL the session default is indistinguishable from a
+    * defaulted call and follows the marker rather than refusing. */
   private def ensureMeta(spark: SparkSession, store: String,
       requestedBuckets: Int, requestedPpm: Option[Long]): (Int, Long) = {
-    recoverBackfill(spark, store)
-    pendingRebucket(spark, store).foreach(n => doRebucket(spark, store, n))
+    settle(spark, store)
     val defPpm = thresholdPpm(Dedup.JaccardThreshold)
-    def gate(ppm: Long): Unit = requestedPpm.foreach { req =>
+    val (nb, ppm) = metaOf(spark, store).getOrElse {
+      require(requestedBuckets > 0,
+        s"storeBuckets must be positive: $requestedBuckets")
+      val ppm0 = requestedPpm.getOrElse(defPpm)
+      val (fs, hp) = fsOf(spark, store)
+      fs.mkdirs(hp)
+      try fs.create(new Path(hp, s"_meta_b${requestedBuckets}_t$ppm0"),
+        false).close()
+      catch { case _: java.io.IOException => () } // concurrent stamp
+      // re-read: a concurrent creator may have stamped DIFFERENT
+      // values; the deterministic winner (or, on a content-bearing
+      // store, the refusal) must gate this call too
+      metaOf(spark, store).getOrElse((requestedBuckets, ppm0))
+    }
+    requestedPpm.foreach { req =>
       require(req == ppm || req == defPpm,
         s"$store was created with admission threshold ${ppm / 1e6} " +
           s"(_meta_*_t$ppm) but this call passed ${req / 1e6} — one " +
           "store is one admission regime; use the store's threshold, " +
           "or rebuildStoreThreshold into a fresh store to change it")
     }
-    metaOf(spark, store) match {
-      case Some((b, ppm)) =>
-        deleteLegacyMarkers(spark, store) // crashed-migration debris
-        gate(ppm)
-        (b, ppm)
-      case None =>
-        val content = storeHasContent(spark, store)
-        val legacyT = legacyThresholdsOf(spark, store)
-        if (legacyT.size > 1 && content)
-          throw new IllegalStateException(
-            s"$store carries ${legacyT.size} legacy _threshold_ " +
-              "markers on a content-bearing store — refusing to guess " +
-              "which regime created it; remove the interloper marker")
-        val nb = legacyBucketsOf(spark, store).getOrElse {
-          require(requestedBuckets > 0,
-            s"storeBuckets must be positive: $requestedBuckets")
-          // legacy FLAT data backfills into the bucketed layout first
-          def backfill(path: String, key: String): Unit =
-            if (hasFlatData(spark, path))
-              swapTree(spark, path) { tmp =>
-                spark.read.parquet(path)
-                  .withColumn("b", bucketCol(col(key), requestedBuckets))
-                  .repartition(col("b"))
-                  .write.partitionBy("b").parquet(tmp)
-              }
-          backfill(docsPath(store), "doc_id")
-          backfill(bandsPath(store), "bk")
-          requestedBuckets
-        }
-        val ppm = legacyT.headOption
-          .getOrElse(requestedPpm.getOrElse(defPpm))
-        if (content && legacyT.isEmpty)
-          Console.err.println(
-            s"[IncrementalDedup] stamping LEGACY (pre-marker) store " +
-              s"$store with admission threshold ${ppm / 1e6} — if this " +
-              "store was drained at a different threshold, " +
-              "rebuildStoreThreshold it into a fresh store at that value")
-        val (fs, hp) = fsOf(spark, store)
-        fs.mkdirs(hp)
-        try fs.create(new Path(hp, s"_meta_b${nb}_t$ppm"), false).close()
-        catch { case _: java.io.IOException => () } // concurrent stamp
-        // re-read: a concurrent creator may have stamped DIFFERENT
-        // values; the deterministic winner (or, on a content-bearing
-        // store, the refusal) must gate this call too
-        val (b2, ppm2) = metaOf(spark, store).getOrElse((nb, ppm))
-        deleteLegacyMarkers(spark, store)
-        gate(ppm2)
-        (b2, ppm2)
-    }
+    (nb, ppm)
   }
 
   private def exists(spark: SparkSession, p: String): Boolean = {
@@ -314,11 +272,10 @@ object IncrementalDedup {
     * sides must bucket through the same canonical type.
     *
     * API boundary contract: store keys are LONG-CASTABLE ids, enforced
-    * loudly per batch ([[refuseBadKeys]]). A store whose bucket
-    * partitions predate the canonical cast (written from int-typed ids
-    * under the old hash(int) scheme) is mis-bucketed under this map;
-    * [[rebucketStore]] to the same count rewrites it through the
-    * canonical hash and is the supported migration. */
+    * loudly per batch ([[refuseBadKeys]]). Stores written from int-typed
+    * ids under the old hash(int) scheme predate the creation record,
+    * so [[settle]] refuses them instead of probing them through this
+    * map. */
   private def bucketCol(key: Column, nb: Int): Column =
     pmod(hash(key.cast("long")), lit(nb))
 
@@ -361,9 +318,8 @@ object IncrementalDedup {
 
   private def countOf(o: Observation): Long = o.get("n").asInstanceOf[Long]
 
-  /** Declared schemas of the two store trees: a read needs no
-    * footer-reading inference job, and files written from int-typed
-    * ids widen to the canonical BIGINT key file by file. */
+  /** Declared schemas of the two store trees: every read goes through
+    * [[readTree]], so none runs a footer-reading inference job. */
   private val TreeSchemas = Map(
     "docs" -> "doc_id BIGINT, text STRING, b INT",
     "bands" -> "doc_id BIGINT, bk BIGINT, b INT")
@@ -377,28 +333,11 @@ object IncrementalDedup {
       buckets: Seq[Int]): DataFrame =
     readTree(spark, path).filter(col("b").isin(buckets: _*))
 
-  /** Bucket count from the creation record (fused marker first,
-    * legacy `_buckets_` fallback), if the store is bucketed. */
-  private def bucketsOf(spark: SparkSession, store: String): Option[Int] =
-    metaOf(spark, store).map(_._1)
-      .orElse(legacyBucketsOf(spark, store))
-
-  /** Tree holds FLAT legacy data: parquet files directly under the
-    * root instead of `b=` partitions. */
-  private def hasFlatData(spark: SparkSession, p: String): Boolean = {
-    val (fs, hp) = fsOf(spark, p)
-    fs.exists(hp) && fs.listStatus(hp).exists(f =>
-      f.isFile && !f.getPath.getName.startsWith("_"))
-  }
-
-  /** Bucket the store (resolve — or create — the creation record;
-    * backfill any legacy flat tree into `b=` partitions first — one
-    * columnar scan per tree, crash-safe through [[swapTree]] /
-    * [[recoverBackfill]]). A pending [[rebucketStore]] intent
-    * finishes FIRST, so no caller can read a bucket count the layout
-    * doesn't have. `requested` binds only at store creation; an
-    * existing record wins. The no-admission-opinion form of
-    * [[ensureMeta]] — returns the store's bucket count. */
+  /** The store's bucket count: the no-admission-opinion form of
+    * [[ensureMeta]]. A crashed swap and a pending [[rebucketStore]]
+    * intent finish FIRST, so no caller can read a bucket count the
+    * layout doesn't have. `requested` binds only at store creation; an
+    * existing record wins. */
   private def ensureBuckets(spark: SparkSession, store: String,
       requested: Int = DefaultStoreBuckets): Int =
     ensureMeta(spark, store, requested, None)._1
@@ -409,16 +348,14 @@ object IncrementalDedup {
     * so the HIGHEST count wins — [[doRebucket]] then clears every
     * intent in one pass, so the losers can never re-trigger a second
     * O(store) rewrite on a later touch. */
-  private def pendingRebucket(
-      spark: SparkSession, store: String): Option[Int] =
-    markerNames(spark, store)
-      .collect { case RebucketRe(n) => n.toInt }.maxOption
+  private def pendingRebucket(names: Seq[String]): Option[Int] =
+    names.collect { case RebucketRe(n) => n.toInt }.maxOption
 
   /** Re-bucket a live store to `buckets` — the operator the bucket
     * count's creation-time immutability otherwise forbids: a corpus
     * that outgrew its creation-time count (per-bucket scan width is
     * |corpus| / buckets) rewrites BOTH trees to the new count through
-    * the same crash-safe staged swap as the legacy migration, under an
+    * the crash-safe staged swap ([[swapTree]]), under an
     * intent marker (`_rebucket_<n>`): a crash at ANY point re-runs to
     * completion on the next store touch ([[ensureBuckets]] finishes a
     * pending re-bucket BEFORE reading the count), so no probe can ever
@@ -436,13 +373,11 @@ object IncrementalDedup {
   def rebucketStore(spark: SparkSession, storeDir: String,
       buckets: Int): Unit = {
     require(buckets > 0, s"buckets must be positive: $buckets")
-    recoverBackfill(spark, storeDir)
-    pendingRebucket(spark, storeDir)
-      .foreach(n => doRebucket(spark, storeDir, n))
-    val cur = bucketsOf(spark, storeDir).getOrElse(
+    settle(spark, storeDir)
+    val cur = metaOf(spark, storeDir).map(_._1).getOrElse(
       throw new IllegalArgumentException(
-        s"$storeDir is not a bucketed store (no _buckets_ marker) — " +
-          "the first processBatch creates one"))
+        s"$storeDir is not a bucketed store (no _meta_b<n>_t<ppm> " +
+          "creation record) — the first processBatch creates one"))
     if (cur == buckets) return
     val (fs, hp) = fsOf(spark, storeDir)
     try fs.create(new Path(hp, s"_rebucket_$buckets"), false).close()
@@ -455,7 +390,7 @@ object IncrementalDedup {
     * intent — in that order, so every crash point either re-runs the
     * rewrite (harmless: re-bucketing an already-`nb` tree reproduces
     * it) or finishes the marker swap; the intent marker outlives both
-    * `_buckets_` markers' window of coexistence, and every reader
+    * creation records' window of coexistence, and every reader
     * resolves the intent before trusting a marker. */
   private def doRebucket(spark: SparkSession, store: String,
       nb: Int): Unit = {
@@ -463,7 +398,7 @@ object IncrementalDedup {
     def rewrite(path: String, key: String): Unit =
       if (exists(spark, path))
         swapTree(spark, path) { tmp =>
-          spark.read.parquet(path)
+          readTree(spark, path)
             .drop("b")
             .withColumn("b", bucketCol(col(key), nb))
             .repartition(col("b"))
@@ -471,35 +406,21 @@ object IncrementalDedup {
         }
     rewrite(docsPath(store), "doc_id")
     rewrite(bandsPath(store), "bk")
-    // move the count inside the creation record. Fused stores
-    // re-stamp the fused marker at the store's OWN ppm — the
-    // two-marker window between the create and the delete always
-    // coexists with the intent marker (cleared last), and every
-    // reader resolves the intent before consulting the record, so
-    // the window is unobservable. Pre-migration stores keep the
-    // legacy count marker; the fused fold happens in ensureMeta,
-    // where a legacy adoption is the one that must be logged.
-    val fusedPpms = metaMarkers(spark, store).map(_._1).distinct
+    // move the count inside the creation record: re-stamp it at the
+    // store's OWN ppm — the two-marker window between the create and
+    // the delete always coexists with the intent marker (cleared
+    // last), and every reader resolves the intent before consulting
+    // the record, so the window is unobservable
+    val fusedPpms = metaMarkers(markerNames(spark, store)).map(_._1).distinct
     require(fusedPpms.size <= 1,
       s"$store carries creation-record markers with DISAGREEING " +
         s"thresholds (${fusedPpms.mkString(", ")} ppm) — resolve the " +
         "interloper before re-bucketing")
-    fusedPpms.headOption match {
-      case Some(ppm) =>
-        try fs.create(new Path(hp, s"_meta_b${nb}_t$ppm"), false).close()
-        catch { case _: java.io.IOException => () } // re-run after crash
-        metaMarkers(spark, store).foreach { case (t, b) =>
-          if (b != nb) fs.delete(new Path(hp, s"_meta_b${b}_t$t"), false)
-        }
-      case None =>
-        try fs.create(new Path(hp, s"_buckets_$nb"), false).close()
-        catch { case _: java.io.IOException => () } // re-run after crash
-    }
-    fs.listStatus(hp).foreach { f =>
-      f.getPath.getName match {
-        case BucketsRe(m) if f.isFile && m.toInt != nb =>
-          fs.delete(f.getPath, false)
-        case _ => ()
+    fusedPpms.foreach { ppm =>
+      try fs.create(new Path(hp, s"_meta_b${nb}_t$ppm"), false).close()
+      catch { case _: java.io.IOException => () } // re-run after crash
+      metaMarkers(markerNames(spark, store)).foreach { case (t, b) =>
+        if (b != nb) fs.delete(new Path(hp, s"_meta_b${b}_t$t"), false)
       }
     }
     // clear EVERY intent, not just this one's: a surviving loser
@@ -518,7 +439,7 @@ object IncrementalDedup {
     * swap: `stage` writes the COMPLETE replacement at the tmp
     * location, the live tree moves aside in one rename, the staged
     * tree moves in with another, the retired copy deletes last.
-    * [[recoverBackfill]] finishes or unwinds every crash point
+    * [[recoverSwap]] finishes or unwinds every crash point
     * (retired present ⇒ the staged copy had finished writing, so
     * forward completion is always safe). */
   private def swapTree(spark: SparkSession, path: String)(
@@ -538,7 +459,7 @@ object IncrementalDedup {
     * one file per touched bucket, so a long-lived store fragments.
     * Each tree holding a bucket with more than `maxFiles` data files
     * is rewritten to its minimal layout through the SAME crash-safe
-    * staged swap as the flat-store migration — content-identical, and
+    * staged swap as [[rebucketStore]] — content-identical, and
     * the rewrite is one columnar scan of that tree (run at rebuild
     * cadence, not per batch). Returns (docs rewritten, bands
     * rewritten). */
@@ -559,7 +480,7 @@ object IncrementalDedup {
       if (!fragmented(path)) false
       else {
         swapTree(spark, path) { tmp =>
-          spark.read.parquet(path)
+          readTree(spark, path)
             .repartition(col("b"))
             .write.partitionBy("b").parquet(tmp)
         }
@@ -568,14 +489,14 @@ object IncrementalDedup {
     (rewrite(docsPath(storeDir)), rewrite(bandsPath(storeDir)))
   }
 
-  /** Finish or unwind a crashed staged tree swap ([[swapTree]] — the
-    * flat-store migration and [[compactStore]] share it): a retired
+  /** Finish or unwind a crashed staged tree swap ([[swapTree]] —
+    * [[rebucketStore]] and [[compactStore]] share it): a retired
     * tree with the live dir missing either completes forward (staged
     * replacement fully written) or restores the retired tree (staging
     * incomplete — the operation re-runs); leftover staging beside a
     * live tree is discarded. */
-  private def recoverBackfill(spark: SparkSession, store: String): Unit = {
-    val (fs, hp) = fsOf(spark, store)
+  private def recoverSwap(spark: SparkSession, store: String): Unit = {
+    val (fs, _) = fsOf(spark, store)
     Seq(docsPath(store), bandsPath(store)).foreach { path =>
       val live = new Path(path)
       val tmp = new Path(path + ".bktmp")
@@ -584,11 +505,11 @@ object IncrementalDedup {
         if (fs.exists(live)) fs.delete(retired, true) // finished swap
         else if (fs.exists(tmp)) { // crashed between the two renames
           require(fs.rename(tmp, live),
-            s"store bucket backfill recovery failed: $path")
+            s"store tree swap recovery failed: $path")
           fs.delete(retired, true)
         } else {
           require(fs.rename(retired, live), // unwind: re-run later
-            s"store bucket backfill restore failed: $path")
+            s"store tree swap restore failed: $path")
         }
       } else if (fs.exists(tmp)) {
         fs.delete(tmp, true) // crashed mid-write: staging discards
@@ -621,7 +542,7 @@ object IncrementalDedup {
     * (consumers should not depend on the layout's bucket column).
     * Tombstoned docs ([[removeDocs]]) are NOT part of the corpus. */
   def readDocs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(docsPath(storeDir)).select("doc_id", "text")
+    readTree(spark, docsPath(storeDir)).select("doc_id", "text")
       .filter(col("text").isNotNull)
 
   final case class RemoveResult(tombstoned: Long, bandRowsRemoved: Long)
@@ -759,7 +680,7 @@ object IncrementalDedup {
       s"rebuild destination already exists: $destDir — regime " +
         "rebuilds land in fresh directories (MVCC cutover), never " +
         "over a live store")
-    // finish any pending re-bucket/backfill intents, then read the
+    // finish any crashed swap or pending re-bucket, then read the
     // source layout; refuse a source with nothing to replay
     require(exists(spark, docsPath(srcDir)),
       s"$srcDir has no docs tree — nothing to rebuild")
@@ -778,7 +699,7 @@ object IncrementalDedup {
     try dfs.create(new Path(dhp, s"_meta_b${nb}_t$newPpm"), false).close()
     catch { case _: java.io.IOException => () }
 
-    val docs = spark.read.parquet(docsPath(srcDir))
+    val docs = readTree(spark, docsPath(srcDir))
     // 1. tombstone carry — removed ids stay down in the new store
     val tombs = docs.filter(col("text").isNull)
       .select(col("doc_id"), col("text"))
@@ -833,8 +754,8 @@ object IncrementalDedup {
     if (!hasBandRows(spark, storeDir))
       return incSets.select(col("doc_id").as("pub_id"),
         col("doc_id").as("new_id"), lit(0.0).as("jaccard")).limit(0)
-    // first touch of a legacy flat store migrates it (marker-gated,
-    // crash-safe) — every read below then prunes on the bucket column
+    // resolves the creation record (a crashed swap or a pending
+    // re-bucket finishes first) — every read below prunes on it
     val nb = ensureBuckets(spark, storeDir, storeBuckets)
     val bandBuckets = Observation()
     val newBands = Dedup.minhashBandKeys(
@@ -907,7 +828,7 @@ object IncrementalDedup {
     // the key check rides the incoming pass, so it runs before ensureMeta
     // may touch the store; the pass observes the id buckets under the
     // count listed now (a call that moves the count recomputes them)
-    val nbListed = metaMarkers(spark, storeDir).headOption
+    val nbListed = metaMarkers(markerNames(spark, storeDir)).headOption
       .fold(storeBuckets)(_._2)
     val keys = Observation()
     val inc = Observation()

@@ -119,15 +119,13 @@ object IncrementalAnnIndex {
   private val BucketsRe = "_buckets_(\\d+)".r
 
   /** Store format stamp. Format 2 = the single-staged-transaction
-    * protocol (`_txn` staging, ledger data column `ref_cid`); the
-    * retired format 1 staged under `_append_staged`/`_rewrite_trash`
-    * and named the ledger column `cid`. The stamp is created the first
-    * time a format-2 maintenance call verifies the store (new stores
-    * verify trivially); a store that FAILS the verification — legacy
-    * staging dirs present, or an old-schema ledger — fails loudly with
-    * migration guidance instead of half-reading it (the v1 ledger's
-    * missing `ref_cid` would otherwise surface as an analysis error
-    * deep inside the first probe). */
+    * protocol (`_txn` staging, ledger data column `ref_cid`). The
+    * first maintenance call on a store that holds no index data yet
+    * creates it. A store whose lists or ledger hold data WITHOUT the
+    * stamp was written by a retired format (format 1 named the ledger
+    * column `cid`; older stores had no ledger at all) and is refused
+    * with its path — never read or rewritten, so a retired ledger can
+    * never surface as an analysis error deep inside the first probe. */
   private val FormatMarker = "_format_2"
 
   /** Stage timing for the maintenance path, printed only when
@@ -202,58 +200,41 @@ object IncrementalAnnIndex {
         .select(col("vec_id"), col("b"))
     }
 
-  /** Create the ledger if missing and return its bucket count. A
-    * pre-ledger store (lists without a ledger) backfills from the
-    * lists' own (vec_id, cid) columns — ONE full columnar scan, once,
-    * at migration; the commit point is a single atomic directory
-    * rename, so a crashed backfill simply reruns. */
+  /** Create the ledger if missing and return its bucket count. Only a
+    * store with no lists data gets a new (empty) ledger, committed by
+    * one atomic directory rename; lists WITHOUT a ledger are refused —
+    * an empty ledger there would silently disarm the redelivery skip
+    * and every delete, which find ids through the ledger. */
   private def ensureLedger(spark: SparkSession, store: String,
       requested: Int): Int = {
     ledgerBucketsOf(spark, store).getOrElse {
       require(requested > 0, s"ledgerBuckets must be positive: $requested")
+      require(!hasData(spark, listsPath(store), "cid"),
+        s"store $store holds inverted lists but no ledger (no " +
+          "ledger/_buckets_<n> marker): the ledger is never rebuilt " +
+          "from the lists — init a fresh store from the source vectors")
       val (fs, lp) = fsOf(spark, ledgerPath(store))
-      val tmp = new Path(s"$store/_ledger_backfill_tmp")
+      val tmp = new Path(s"$store/_ledger_tmp")
       fs.delete(tmp, true)
-      if (hasData(spark, listsPath(store), "cid")) {
-        spark.read.parquet(listsPath(store))
-          .select(col("vec_id"), col("cid").cast("long").as("ref_cid"),
-            bucketOf(col("vec_id"), requested).as("b"))
-          .repartition(col("b"))
-          .write.partitionBy("b").parquet(tmp.toString)
-      } else {
-        fs.mkdirs(tmp)
-      }
-      val mk = fs.create(new Path(tmp, s"_buckets_$requested"), false)
-      mk.close()
-      require(fs.rename(tmp, lp), // atomic commit of the whole backfill
-        s"ledger backfill commit failed: $tmp -> $lp")
+      fs.mkdirs(tmp)
+      fs.create(new Path(tmp, s"_buckets_$requested"), false).close()
+      require(fs.rename(tmp, lp), s"ledger commit failed: $tmp -> $lp")
       requested
     }
   }
 
-  /** Fail loudly on a format-1 store; stamp [[FormatMarker]] once a
-    * store verifies as format 2. Runs before every maintenance call's
-    * first ledger access; the marker makes every later call one
-    * `exists` probe. */
+  /** Refuse a store whose lists or ledger hold data without the
+    * [[FormatMarker]] stamp; stamp one that holds none. Runs before
+    * every maintenance call's first ledger access; the stamp makes
+    * every later call one `exists` probe. */
   private def checkFormat(spark: SparkSession, store: String): Unit = {
     val (fs, sp) = fsOf(spark, store)
     if (fs.exists(new Path(sp, FormatMarker))) return
-    Seq("_append_staged", "_rewrite_trash").foreach { d =>
-      require(!fs.exists(new Path(sp, d)),
-        s"store $store carries the retired format-1 staging dir '$d' " +
-          "(possibly an in-flight v1 recovery): finish or discard it " +
-          "with the code that wrote it, or rebuild the store — the " +
-          "format-2 recover() cannot interpret v1 staging safely")
-    }
-    if (hasData(spark, ledgerPath(store), "b")) {
-      val fields =
-        spark.read.parquet(ledgerPath(store)).schema.fieldNames.toSet
-      require(fields.contains("ref_cid"),
-        s"store $store has a format-1 ledger (columns " +
-          s"${fields.mkString(", ")} — no ref_cid): delete the ledger " +
-          "directory so the next maintenance call re-backfills it from " +
-          "the lists (one columnar scan), or rebuild the store")
-    }
+    require(!hasData(spark, listsPath(store), "cid") &&
+        !hasData(spark, ledgerPath(store), "b"),
+      s"store $store holds index data but no $FormatMarker stamp: a " +
+        "retired store format, which is never adopted or rewritten — " +
+        "init a fresh store from the source vectors")
     try fs.create(new Path(sp, FormatMarker), false).close()
     catch { case _: java.io.IOException => () } // concurrent stamp: fine
   }

@@ -597,12 +597,10 @@ class IncrementalAnnSpec extends AnyFunSuite {
   }
 
   test("a format-1 store fails loudly instead of half-reading") {
-    // legacy staging dirs (possibly an in-flight v1 recovery) must
-    // abort maintenance with migration guidance, not be silently
-    // ignored; same for a v1-schema ledger (data column `cid`, no
-    // `ref_cid`) — ensureLedger would otherwise skip the backfill on
-    // the `_buckets_` marker and the first probe would fail deep
-    // inside an analysis error
+    // a format-1 store never carried the `_format_2` stamp: whatever it
+    // holds — retired staging dirs, a v1-schema ledger (data column
+    // `cid`, no `ref_cid`) — maintenance refuses it with its path
+    // instead of reading or rewriting it
     val base = Files.createTempDirectory("annfmt").toString
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -614,7 +612,8 @@ class IncrementalAnnSpec extends AnyFunSuite {
     val ex1 = intercept[IllegalArgumentException] {
       IncrementalAnnIndex.appendBatch(vecs(50 until 60), store1)
     }
-    assert(ex1.getMessage.contains("format-1 staging dir"))
+    assert(ex1.getMessage.contains(store1) &&
+      ex1.getMessage.contains("_format_2"), ex1.getMessage)
 
     // a v1 ledger: `cid` data column, bucket marker present, no stamp
     val store2 = s"$base/legacy_ledger"
@@ -633,12 +632,60 @@ class IncrementalAnnSpec extends AnyFunSuite {
     val ex2 = intercept[IllegalArgumentException] {
       IncrementalAnnIndex.appendBatch(vecs(50 until 60), store2)
     }
-    assert(ex2.getMessage.contains("format-1 ledger"))
-    // deleting the ledger dir (the message's remedy) heals the store:
-    // the backfill re-runs and maintenance proceeds
+    assert(ex2.getMessage.contains(store2) &&
+      ex2.getMessage.contains("_format_2"), ex2.getMessage)
+    // deleting the ledger does not make it readable: the lists are
+    // still unstamped format-1 content
     fs.delete(new org.apache.hadoop.fs.Path(s"$store2/ledger"), true)
-    val r = IncrementalAnnIndex.appendBatch(vecs(50 until 60), store2)
-    assert(r.appended == 10 && r.skippedRedelivered == 0)
+    intercept[IllegalArgumentException] {
+      IncrementalAnnIndex.appendBatch(vecs(50 until 60), store2)
+    }
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store2/_format_2")))
+  }
+
+  test("index data without its stamp or its ledger is refused, never " +
+      "backfilled") {
+    val base = Files.createTempDirectory("annref").toString
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def listIds(store: String): Set[Long] =
+      spark.read.parquet(s"$store/lists").select("vec_id")
+        .collect().map(_.getLong(0)).toSet
+    val feed = vecs(50 until 60).withColumn("change_type", lit("insert"))
+    def maintenance(store: String): Seq[(String, () => Any)] = Seq(
+      "appendBatch" ->
+        (() => IncrementalAnnIndex.appendBatch(vecs(50 until 60), store)),
+      "applyChanges" ->
+        (() => IncrementalAnnIndex.applyChanges(feed, store)),
+      "compact" ->
+        (() => IncrementalAnnIndex.compact(spark, store, maxFiles = 1)))
+
+    // lists and ledger with no `_format_2` stamp
+    val unstamped = s"$base/unstamped"
+    IncrementalAnnIndex.init(vecs(0 until 50), unstamped)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$unstamped/_format_2"), false)
+    maintenance(unstamped).foreach { case (op, call) =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains(unstamped) &&
+        ex.getMessage.contains("_format_2"), s"$op: ${ex.getMessage}")
+    }
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$unstamped/_format_2")),
+      "a refused store is never stamped")
+    assert(listIds(unstamped) == (0 until 50).map(_.toLong).toSet)
+
+    // a stamped store whose ledger was deleted: an empty ledger would
+    // disarm the redelivery skip and every delete, so none is created
+    val noLedger = s"$base/no_ledger"
+    IncrementalAnnIndex.init(vecs(0 until 50), noLedger)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$noLedger/ledger"), true)
+    maintenance(noLedger).take(2).foreach { case (op, call) =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains(noLedger) &&
+        ex.getMessage.contains("no ledger"), s"$op: ${ex.getMessage}")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$noLedger/ledger")),
+        s"$op must not create an empty ledger")
+    }
+    assert(listIds(noLedger) == (0 until 50).map(_.toLong).toSet)
   }
 
   test("PQ quantizer above the inline threshold takes the join form, same codes") {

@@ -451,20 +451,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
       Seq((100L, base.replace("valley", "meadow"))).toDF("doc_id", "text"),
       store)
     assert(p.count() == 2)
-    // a crafted LEGACY _threshold_ marker next to the creation record
-    // is migration debris: ignored in favor of the record, cleaned up,
-    // regime unchanged (r18's lowest-ppm rule would have FLIPPED this
-    // established store to 0.8)
-    fs.create(new org.apache.hadoop.fs.Path(s"$store/_threshold_800000"),
-      false).close()
     val r4 = IncrementalDedup.processBatch( // near-dup of doc 1: the
       // 1.01 regime must still admit it
       Seq((5L, base.replace("quick", "swift"))).toDF("doc_id", "text"),
       store)
     assert(r4.accepted == 1 && r4.rejectedNearDup == 0,
-      s"the creation record must win over a late legacy marker, got $r4")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$store/_threshold_800000")), "legacy debris must be cleaned up")
+      s"a default call must keep following the creation record, got $r4")
     assert(fs.exists(
       new org.apache.hadoop.fs.Path(s"$store/_meta_b16_t1010000")))
     // an INTERLOPER creation record on a CONTENT-BEARING store refuses
@@ -488,8 +480,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(r5.accepted == 1 && r5.rejectedNearDup == 0)
   }
 
-  test("creation races arbitrate only on an EMPTY store; legacy marker " +
-      "pairs fold into the fused record on first touch") {
+  test("creation races arbitrate only on an EMPTY store") {
     val dir = Files.createTempDirectory("incdedupmeta").toString
     val hc = spark.sessionState.newHadoopConf()
     // TRUE creation race: two fused records land on a store with no
@@ -511,57 +502,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(!rfs.exists(
       new org.apache.hadoop.fs.Path(s"$raced/_meta_b16_t900000")),
       "the losing creation record must be deleted")
-
-    // LEGACY (r18 two-marker) store: first touch folds both markers
-    // into the fused record and drops the legacy files; decisions
-    // follow the recorded regime unchanged
-    val legacy = s"$dir/legacy"
-    IncrementalDedup.processBatch(
-      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), legacy,
-      threshold = 1.01)
-    val lfs = new org.apache.hadoop.fs.Path(legacy).getFileSystem(hc)
-    lfs.delete(new org.apache.hadoop.fs.Path(s"$legacy/_meta_b16_t1010000"),
-      false)
-    lfs.create(new org.apache.hadoop.fs.Path(s"$legacy/_buckets_16"),
-      false).close()
-    lfs.create(new org.apache.hadoop.fs.Path(s"$legacy/_threshold_1010000"),
-      false).close()
-    val lr = IncrementalDedup.processBatch( // near-dup: 1.01 admits
-      Seq((3L, base.replace("valley", "meadow"))).toDF("doc_id", "text"),
-      legacy)
-    assert(lr.accepted == 1 && lr.rejectedNearDup == 0)
-    assert(lfs.exists(
-      new org.apache.hadoop.fs.Path(s"$legacy/_meta_b16_t1010000")),
-      "the legacy pair must fold into the fused record")
-    assert(!lfs.exists(new org.apache.hadoop.fs.Path(s"$legacy/_buckets_16")))
-    assert(!lfs.exists(
-      new org.apache.hadoop.fs.Path(s"$legacy/_threshold_1010000")))
-
-    // PRE-MARKER legacy store (no threshold ever recorded): the first
-    // post-upgrade touch stamps the calling value as the recorded
-    // regime (and says so loudly on stderr) — pinned here by the
-    // resulting marker and by the refusal a later disagreeing
-    // explicit call gets
-    val premark = s"$dir/premark"
-    IncrementalDedup.processBatch(
-      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), premark)
-    val pfs = new org.apache.hadoop.fs.Path(premark).getFileSystem(hc)
-    pfs.delete(new org.apache.hadoop.fs.Path(s"$premark/_meta_b16_t800000"),
-      false)
-    pfs.create(new org.apache.hadoop.fs.Path(s"$premark/_buckets_16"),
-      false).close()
-    // first touch is a no-opinion probe: adopts the session default
-    IncrementalDedup.probeStorePairs(
-      Seq((100L, third)).toDF("doc_id", "text"), premark).count()
-    assert(pfs.exists(
-      new org.apache.hadoop.fs.Path(s"$premark/_meta_b16_t800000")),
-      "a pre-marker store's first touch records the default regime")
-    val exUp = intercept[IllegalArgumentException] {
-      IncrementalDedup.processBatch(
-        Seq((3L, third)).toDF("doc_id", "text"), premark,
-        threshold = 1.01)
-    }
-    assert(exUp.getMessage.contains("admission"))
   }
 
   test("admission-regime rebuild: replay at the new threshold, " +
@@ -792,35 +732,131 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(r3.rejectedNearDup == 1, s"$r3")
   }
 
-  test("a legacy flat store migrates on first touch, content intact") {
-    val store = Files.createTempDirectory("incdedupm").toString + "/corpus"
-    // craft the retired flat layout: parquet files directly under
-    // docs/ and bands/, no bucket column, no marker
+  /** Every entry under `root` (files and directories, recursively) by
+    * path relative to it, with its modification time. */
+  private def entries(root: String): Map[String, Long] = {
+    val rp = new org.apache.hadoop.fs.Path(root)
+    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
+    val prefix = fs.getFileStatus(rp).getPath.toString + "/"
+    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        val e = f.getPath.toString.stripPrefix(prefix) -> f.getModificationTime
+        if (f.isDirectory) e +: walk(f.getPath) else Seq(e)
+      }
+    walk(rp).toMap
+  }
+
+  test("a store with content but no creation record is refused, untouched") {
+    val dir = Files.createTempDirectory("incdedupref").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // the retired two-marker layout: bucketed trees, `_buckets_` and
+    // `_threshold_` markers, no fused creation record
+    val twoMarker = s"$dir/two_marker"
+    IncrementalDedup.processBatch(
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), twoMarker)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$twoMarker/_meta_b16_t800000"),
+      false)
+    Seq("_buckets_16", "_threshold_800000").foreach(m =>
+      fs.create(new org.apache.hadoop.fs.Path(s"$twoMarker/$m"), false)
+        .close())
+    // the retired flat layout: parquet files directly under docs/ and
+    // bands/, no bucket column, no marker
+    val flat = s"$dir/flat"
     val docs = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
-    docs.write.parquet(s"$store/docs")
+    docs.write.parquet(s"$flat/docs")
     graft.dedup.Dedup.minhashBandKeys(
         graft.dedup.Dedup.minhashSignaturesFromSets(
           graft.dedup.Dedup.docShingleSets(docs, "doc_id", "text")))
-      .write.parquet(s"$store/bands")
-    // first touch: near-dup of doc 1 must be rejected against the
-    // MIGRATED index; doc 2 redelivered skips; one novel doc lands
-    val r = IncrementalDedup.processBatch(
-      Seq((10L, base.replace("valley", "meadow")), (11L, third),
-        (2L, other)).toDF("doc_id", "text"), store)
-    assert(r == IncrementalDedup.BatchResult(1, 1, 1), s"$r")
-    val after = spark.read.parquet(s"$store/docs")
-    assert(after.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 11L))
-    assert(after.columns.contains("b"), "migrated tree must be bucketed")
-    val fs = new org.apache.hadoop.fs.Path(store)
+      .write.parquet(s"$flat/bands")
+    val batch = Seq((2L, other), (10L, base.replace("valley", "meadow")),
+      (11L, third)).toDF("doc_id", "text")
+    Seq(twoMarker, flat).foreach { store =>
+      val before = entries(store)
+      val calls: Seq[(String, () => Any)] = Seq(
+        "processBatch" -> (() => IncrementalDedup.processBatch(batch, store)),
+        "probeStorePairs" ->
+          (() => IncrementalDedup.probeStorePairs(batch, store)),
+        "removeDocs" -> (() =>
+          IncrementalDedup.removeDocs(spark, store, Seq(1L).toDF("doc_id"))),
+        "rebucketStore" ->
+          (() => IncrementalDedup.rebucketStore(spark, store, 8)),
+        "compactStore" ->
+          (() => IncrementalDedup.compactStore(spark, store, maxFiles = 1)))
+      calls.foreach { case (op, call) =>
+        val ex = intercept[IllegalStateException](call())
+        assert(ex.getMessage.contains(store) &&
+          ex.getMessage.contains("creation record"),
+          s"$op on $store: ${ex.getMessage}")
+        assert(entries(store) == before,
+          s"$op must leave the refused store $store untouched")
+      }
+    }
+  }
+
+  test("a crashed staged tree swap recovers to the pre- or post-swap " +
+      "store on the next batch") {
+    val dir = Files.createTempDirectory("incdedupswap").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$store/_meta_b16_t800000")),
-      "a flat legacy store's migration stamps the fused creation record")
-    // replay is still a no-op through the migrated store
-    val r2 = IncrementalDedup.processBatch(
-      Seq((11L, third)).toDF("doc_id", "text"), store)
-    assert(r2 == IncrementalDedup.BatchResult(0, 0, 1), s"$r2")
+    def build(store: String): Unit = {
+      IncrementalDedup.processBatch((0 until 200).map(i =>
+        (i.toLong, s"$other unique token$i marker${i * 7} tail${i % 13}"))
+        .toDF("doc_id", "text"), store)
+      IncrementalDedup.processBatch(Seq((900L, base)).toDF("doc_id", "text"),
+        store)
+    }
+    def files(tree: String): Set[String] = entries(tree).keySet
+      .filter(_.endsWith(".parquet"))
+    def content(store: String) = (
+      IncrementalDedup.readDocs(spark, store)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet,
+      spark.read.parquet(s"$store/bands").select("bk", "doc_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    // a redelivery, a near-dup of a stored doc and a novel doc
+    val batch = Seq((7L, "redelivered"),
+      (901L, base.replace("valley", "meadow")),
+      (1004L, "a novel doc about something else entirely here"))
+      .toDF("doc_id", "text")
+    val control = s"$dir/control"
+    build(control)
+    val expected = IncrementalDedup.processBatch(batch, control)
+    assert(expected == IncrementalDedup.BatchResult(1, 1, 1), s"$expected")
+    // the three states swapTree's renames can leave in each tree
+    Seq("staged", "retired_staged", "retired_live").foreach { state =>
+      val store = s"$dir/$state"
+      build(store)
+      val swapped = Seq("docs", "bands").map { t =>
+        val live = s"$store/$t"
+        val tmp = new org.apache.hadoop.fs.Path(s"$live.bktmp")
+        val retired = new org.apache.hadoop.fs.Path(s"$live.flat")
+        val preFiles = files(live)
+        // compactStore's staging: the same rows, one file per bucket
+        spark.read.parquet(live).repartition(col("b"))
+          .write.partitionBy("b").parquet(tmp.toString)
+        val postFiles = files(tmp.toString)
+        if (state != "staged")
+          assert(fs.rename(new org.apache.hadoop.fs.Path(live), retired))
+        if (state == "retired_live")
+          assert(fs.rename(tmp, new org.apache.hadoop.fs.Path(live)))
+        t -> (preFiles, postFiles)
+      }.toMap
+      val r = IncrementalDedup.processBatch(batch, store)
+      assert(r == expected, s"$state: $r")
+      assert(content(store) == content(control),
+        s"$state: the store must hold the control's content")
+      swapped.foreach { case (t, (pre, post)) =>
+        val now = files(s"$store/$t")
+        val (kept, gone) = if (state == "staged") (pre, post) else (post, pre)
+        assert(kept.subsetOf(now) && gone.intersect(now).isEmpty,
+          s"$state: $t must be exactly the " +
+            s"${if (state == "staged") "pre" else "post"}-swap tree")
+      }
+      val leftovers = fs.listStatus(new org.apache.hadoop.fs.Path(store))
+        .map(_.getPath.getName)
+        .filter(n => n.endsWith(".bktmp") || n.endsWith(".flat"))
+      assert(leftovers.isEmpty, s"$state: leftovers ${leftovers.toSeq}")
+    }
   }
 
   test("empty, all-redelivered and all-short batches finish as no-ops") {
@@ -843,34 +879,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
       IncrementalDedup.BatchResult(2, 0, 0))
     assert(IncrementalDedup.probeStorePairs(
       Seq((5L, "two words")).toDF("doc_id", "text"), store).count() == 0)
-  }
-
-  test("int-typed legacy files widen to the declared BIGINT key") {
-    val store = Files.createTempDirectory("incdedupi").toString + "/corpus"
-    // the legacy flat layout, crafted from INT doc_ids
-    val docs = Seq((1, base), (2, other)).toDF("doc_id", "text")
-    docs.write.parquet(s"$store/docs")
-    graft.dedup.Dedup.minhashBandKeys(
-        graft.dedup.Dedup.minhashSignaturesFromSets(
-          graft.dedup.Dedup.docShingleSets(docs, "doc_id", "text")))
-      .write.parquet(s"$store/bands")
-    assert(spark.read.parquet(s"$store/docs").schema("doc_id").dataType ==
-      org.apache.spark.sql.types.IntegerType)
-    // redelivered 2 skips against the INT files; the near-dup of 1
-    // rejects; 11 lands as a LONG file next to the INT ones
-    val r = IncrementalDedup.processBatch(
-      Seq((2L, other), (10L, base.replace("valley", "meadow")),
-        (11L, third)).toDF("doc_id", "text"), store)
-    assert(r == IncrementalDedup.BatchResult(1, 1, 1), s"$r")
-    val r2 = IncrementalDedup.processBatch(
-      Seq((1L, base), (11L, third)).toDF("doc_id", "text"), store)
-    assert(r2 == IncrementalDedup.BatchResult(0, 0, 2), s"$r2")
-    // the probe reads both file types and pairs with the INT-era doc
-    val p = IncrementalDedup.probeStorePairs(
-      Seq((100L, base.replace("valley", "meadow")), (101L, third))
-        .toDF("doc_id", "text"), store)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(p == Set((1L, 100L), (11L, 101L)), s"$p")
   }
 
   /** Spark jobs `f` runs: a public listener counts the jobs of the job
